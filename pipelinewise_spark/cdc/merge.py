@@ -48,32 +48,10 @@ from pipelinewise_spark.lake.table import (
     LakeTable,
     NullKeyError,
     any_null_key as _any_null_key,
+    observed_metrics,
 )
 
 DROP_ACTIONS = ("delete", "noop_delete")
-
-
-def _obs_get(obs: Observation, df: DataFrame, aggs: list) -> dict:
-    """``Observation.get`` with an eliminated-node fallback.
-
-    AQE's empty-relation propagation can replace the subtree feeding the
-    write's repartition exchange with an empty LocalRelation when it
-    turns out to produce zero rows — e.g. a merge in which every
-    surviving row of the affected buckets was deleted, under the
-    non-aligned (``bucket_col``) layout whose write adds a salted
-    repartition. That elimination takes the ``CollectMetrics`` node with
-    it, leaving the observation holding a schema-less empty row that
-    ``Observation.get`` cannot decode (``toPyRow`` assertion). The DATA
-    outcome is correct (an empty write replacing the bucket); only the
-    metrics are lost — so re-run the same aggregate expressions directly
-    against the pre-observe frame: the plan is deterministic, and the
-    recompute is cheap exactly when this fires (the plan just proved it
-    yields ~no output). The aligned layout writes with no post-observe
-    exchange, so it never hits this."""
-    try:
-        return obs.get
-    except Exception:
-        return df.agg(*aggs).first().asDict()
 
 
 class ExactlyOnceWindowError(RuntimeError):
@@ -291,7 +269,7 @@ def _merge_once(
         delta_added = table.write_bucket_files(
             observed, clustered=table.buckets_aligned_with_keys
         )
-        m = _obs_get(obs, prepared, aggs)
+        m = observed_metrics(obs, prepared, aggs)
         if int(m.get("null_keys") or 0):
             # same pre-commit rejection as the CoW path: a null PK would
             # group with every other null PK at read-time resolution
@@ -494,7 +472,7 @@ def _merge_cow(
             f"(unexpected buckets {sorted(stray)}); snapshot/persist the "
             f"source before merge_into"
         )
-    m = _obs_get(obs, projected, aggs)
+    m = observed_metrics(obs, projected, aggs)
     metrics = {k: (int(v) if v is not None else None) for k, v in m.items()
                if k not in ("max_lsn", "null_keys")}
     null_keys = int(m.get("null_keys") or 0)
@@ -583,7 +561,7 @@ def _append_only(
     ]
     observed = prepared.observe(obs, *aggs).withColumn("_bucket", bucket)
     added = table.write_bucket_files(observed)
-    m = _obs_get(obs, prepared, aggs)
+    m = observed_metrics(obs, prepared, aggs)
     max_lsn = m.get("max_lsn")
     new_lsn = max(
         int(max_lsn) if max_lsn is not None else -1,

@@ -150,6 +150,13 @@ class CdcPipeline:
         #: auto-evolve: "version" (reference parity) or "promote"
         #: (in-place native promotion, evolution/drift.py).
         self.widen = widen
+        #: ((SCHEMA message, widen, table fields after the reconcile),
+        #: message struct) of the last SCHEMA reconciled: reconcile is a
+        #: pure diff of (fields, message, widen) and idempotent, so the
+        #: same message against the fields it produced is skipped — a
+        #: batch of N singer files carries N identical SCHEMA lines per
+        #: stream.
+        self._last_schema: tuple | None = None
         #: drop events at/below the committed LSN bookmark before merging
         #: (the reference tap-restart replay contract). REQUIRES the
         #: source to deliver non-decreasing LSNs across micro-batches —
@@ -259,9 +266,18 @@ class CdcPipeline:
         # SCHEMA must not evolve this table with foreign columns — fall
         # back to the table's own schema instead
         for msg in ctrl["SCHEMA"]:
-            if msg.get("stream") == self.stream:
-                payload = jsonschema_to_struct(msg["schema"])
-                reconcile(self.table, payload, widen=self.widen)
+            if msg.get("stream") != self.stream:
+                continue
+            seen = (msg["schema"], self.widen, self.table.manifest["fields"])
+            if self._last_schema is not None and self._last_schema[0] == seen:
+                payload = self._last_schema[1]
+                continue
+            payload = jsonschema_to_struct(msg["schema"])
+            reconcile(self.table, payload, widen=self.widen)
+            self._last_schema = (
+                (msg["schema"], self.widen, self.table.manifest["fields"]),
+                payload,
+            )
         if payload is None:
             payload = StructType(
                 [

@@ -14,7 +14,9 @@ the identical sign arrays.
 from __future__ import annotations
 
 import hashlib
+from collections import OrderedDict
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -26,9 +28,15 @@ from pyspark.sql import functions as F
 # expression id for dataset-bound columns (``df["v"]`` → ``v#123``), so
 # two different datasets' same-named columns never collide; plain
 # ``F.col("v")`` from any caller keys as the same unresolved name,
-# which resolves per plan as always. Caches EXPRESSION TREES only —
-# never data or results.
-_UNROLLED_CACHE: dict = {}
+# which resolves per plan as always. Keys also carry the JVM gateway and
+# SparkContext identity: a tree holds JVM object references, which a
+# restarted context or JVM must never be handed. Caches EXPRESSION TREES
+# only — never data or results — and at most _UNROLLED_CACHE_MAX of
+# them, least recently used evicted first: dataset-bound keys change
+# with every new DataFrame, so an unbounded memo grows for the life of
+# the driver.
+_UNROLLED_CACHE: OrderedDict = OrderedDict()
+_UNROLLED_CACHE_MAX = 256
 
 
 def _expr_key(c) -> str:
@@ -36,6 +44,20 @@ def _expr_key(c) -> str:
         return c._jc.expr().toString()
     except Exception:
         return str(c)
+
+
+def _unrolled(key: tuple, build):
+    """The memoized tree for ``key``, built by ``build()`` on a miss."""
+    sc = SparkContext._active_spark_context
+    key = (id(sc._gateway), sc.applicationId) + key if sc else key
+    c = _UNROLLED_CACHE.get(key)
+    if c is None:
+        c = _UNROLLED_CACHE[key] = build()
+        if len(_UNROLLED_CACHE) > _UNROLLED_CACHE_MAX:
+            _UNROLLED_CACHE.popitem(last=False)
+    else:
+        _UNROLLED_CACHE.move_to_end(key)
+    return c
 
 
 def dot(a, b, dim: int | None = None):
@@ -51,14 +73,13 @@ def dot(a, b, dim: int | None = None):
     scored the truncated prefix — fixed-dim inputs are the contract
     either way."""
     if dim is not None:
-        key = ("dot", _expr_key(a), _expr_key(b), dim)
-        c = _UNROLLED_CACHE.get(key)
-        if c is None:
+        def build():
             c = F.lit(0.0)
             for i in range(dim):
                 c = c + a[i].cast("double") * b[i].cast("double")
-            _UNROLLED_CACHE[key] = c
-        return c
+            return c
+
+        return _unrolled(("dot", _expr_key(a), _expr_key(b), dim), build)
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -70,15 +91,13 @@ def norm(a, dim: int | None = None):
     """L2 norm; ``dim`` unrolls like :func:`dot` (same fold order →
     bit-identical doubles)."""
     if dim is not None:
-        key = ("norm", _expr_key(a), dim)
-        c = _UNROLLED_CACHE.get(key)
-        if c is None:
+        def build():
             s = F.lit(0.0)
             for i in range(dim):
                 s = s + a[i].cast("double") * a[i].cast("double")
-            c = F.sqrt(s)
-            _UNROLLED_CACHE[key] = c
-        return c
+            return F.sqrt(s)
+
+        return _unrolled(("norm", _expr_key(a), dim), build)
     return F.sqrt(
         F.aggregate(
             a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")

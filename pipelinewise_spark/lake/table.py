@@ -40,6 +40,7 @@ catalog CAS (Hive/Glue/REST); everything else is storage-agnostic.
 from __future__ import annotations
 
 import contextlib
+import hashlib
 import json
 import os
 import shutil
@@ -47,9 +48,11 @@ import time
 import uuid
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from pipelinewise_spark.cdc.dedup import latest_per_key
 
 class NullKeyError(ValueError):
     """A batch carried NULL in a primary-key column. Raised before commit
@@ -69,6 +72,29 @@ def any_null_key(key_cols: list[str], prefix: str = "") -> Column:
         c = F.col(f"{prefix}{k}").isNull()
         cond = c if cond is None else (cond | c)
     return cond
+
+
+def observed_metrics(obs: Observation, df: DataFrame, aggs: list) -> dict:
+    """``obs.get`` for an Observation on ``df`` with aggregates ``aggs``,
+    with one fallback for every observed write path.
+
+    AQE's empty-relation propagation can replace the subtree feeding a
+    write with an empty LocalRelation when it turns out to produce zero
+    rows — e.g. an empty snapshot ``overwrite``, or a merge in which every
+    surviving row of the affected buckets was deleted, under the
+    non-aligned (``bucket_col``) layout whose write adds a salted
+    repartition. That elimination takes the ``CollectMetrics`` node with
+    it, leaving the observation holding a schema-less empty row that
+    ``Observation.get`` cannot decode (``toPyRow`` assertion). The DATA
+    outcome is correct (an empty write); only the metrics are lost — so
+    re-run the same aggregate expressions directly against the
+    pre-observe frame ``df``: the plan is deterministic, and the
+    recompute is cheap exactly when this fires (the plan just proved it
+    yields ~no output)."""
+    try:
+        return obs.get
+    except Exception:
+        return df.agg(*aggs).first().asDict()
 
 
 MANIFEST_DIR = "_manifests"
@@ -405,7 +431,14 @@ class LakeTable:
         last-per-key by LSN across base+delta and drops rows whose winning
         record is a tombstone (unless ``include_tombstones`` /
         soft-delete property keeps them) — exactly the merge the CoW path
-        applies at write time, deferred to read/compaction.
+        applies at write time, deferred to read/compaction. The
+        resolution is BUCKET-LOCAL: every base and delta file holds
+        exactly one hash bucket of keys, so the in-scope files are
+        exposed as one bucketed relation (:meth:`_bucketed_relation`)
+        and last-per-key runs per bucket with NO exchange. Trade-off: a
+        delta read runs one task per bucket, so its parallelism is
+        bounded by ``num_buckets``. Reads without deltas in scope are
+        plain file scans, split as finely as Spark likes.
 
         ``stats_filter`` — data skipping: ``{logical_col: (lo, hi)}``
         (either end None = open; timestamps as datetime or epoch-µs int)
@@ -427,58 +460,36 @@ class LakeTable:
             if buckets is not None
             else sorted(set(bucket_map) | set(delta_map))
         )
-        if stats_filter and self.key_cols and resolve_deltas and any(
+        resolve = resolve_deltas and self.key_cols and any(
             delta_map.get(k) for k in keys
-        ):
+        )
+        if stats_filter and resolve:
             raise ValueError(
                 "stats_filter with outstanding merge-on-read deltas could "
                 "resurrect stale rows (last-per-key would resolve among a "
                 "pruned subset); run compact() first"
             )
         fields = manifest["fields"]
-        logical = _struct_from_fields([(f["logical"], f["type"]) for f in fields])
-        physical = _struct_from_fields([(f["physical"], f["type"]) for f in fields])
-        norm_filter = (
-            self._normalize_stats_filter(manifest, stats_filter)
-            if stats_filter
-            else None
-        )
-
-        def _load(file_map) -> DataFrame | None:
-            files = [
-                os.path.join(self.path, rel)
-                for k in keys
-                for rel in file_map.get(k, [])
-                if norm_filter is None
-                or self._stats_keep(manifest, rel, norm_filter)
-            ]
-            if not files:
-                return None
-            df = self.spark.read.schema(physical).parquet(*files)
-            return df.select(
-                *[F.col(f["physical"]).alias(f["logical"]) for f in fields]
-            )
-
-        base = _load(bucket_map)
-        delta = _load(delta_map) if resolve_deltas else None
-        if base is None and delta is None:
-            return self.spark.createDataFrame([], logical)
-        if delta is None:
-            merged = base
+        if resolve:
+            rel = self._bucketed_relation(manifest, self._files(manifest, keys))
+            merged = latest_per_key(rel, self.key_cols, lsn_col=LSN_COL)
         else:
-            merged = delta if base is None else base.unionByName(delta)
-            if self.key_cols:
-                from pipelinewise_spark.cdc.dedup import latest_per_key
-
-                merged = latest_per_key(merged, self.key_cols, lsn_col=LSN_COL)
+            # keyless tables never resolve: their deltas (if any) are
+            # plain appends read beside the base
+            files = self._files(manifest, keys, deltas=resolve_deltas,
+                                stats_filter=stats_filter)
+            physical = _struct_from_fields(
+                [(f["physical"], f["type"]) for f in fields]
+            )
+            merged = self.spark.read.schema(physical).parquet(
+                *[os.path.join(self.path, rel) for _, rel in files]
+            ).select(*[F.col(f["physical"]).alias(f["logical"]) for f in fields])
         # tombstone visibility is decided by the table property alone and
         # applies uniformly to base-only and base+delta reads (a CoW table
         # without the property never writes tombstones, so the pushed-down
         # IS NULL predicate is free there)
-        if not include_tombstones and not manifest["properties"].get(
-            "soft_delete", False
-        ):
-            merged = merged.where(F.col(SDC_DELETED_AT).isNull())
+        if not include_tombstones:
+            merged = _hide_tombstones(merged, manifest)
         return merged.select(*[f["logical"] for f in fields])
 
     def to_df(self) -> DataFrame:
@@ -498,6 +509,100 @@ class LakeTable:
             stats_filter={LSN_COL: (int(lsn) + 1, None)}, **read_kw
         ).where(F.col(LSN_COL) > int(lsn))
 
+    def _files(self, manifest: dict, keys: list[str], *, deltas: bool = True,
+               stats_filter: dict | None = None) -> list[tuple[int, str]]:
+        """(bucket, relative path) of buckets ``keys``' base (and delta)
+        files, less those ``stats_filter`` (see :meth:`read`) skips."""
+        norm = stats_filter and self._normalize_stats_filter(manifest, stats_filter)
+        maps = [manifest["buckets"]] + ([manifest.get("deltas", {})] if deltas else [])
+        return [
+            (int(k), rel)
+            for k in keys
+            for fmap in maps
+            for rel in fmap.get(k, [])
+            if not norm or self._stats_keep(manifest, rel, norm)
+        ]
+
+    def _bucketed_relation(
+        self, manifest: dict, files: list[tuple[int, str]], link_dir: str | None = None
+    ) -> DataFrame | None:
+        """``files`` (from :meth:`_files`) as ONE relation whose scan
+        declares the table's hash-bucket layout to Catalyst —
+        ``HashPartitioning(bucket_source_cols, num_buckets)`` — so a join
+        or aggregate keyed on the bucket columns plans no exchange. This
+        is the contract Iceberg's storage-partitioned joins / DSv2
+        ``KeyGroupedPartitioning`` expose; here it needs no JVM connector:
+
+        1. the files are hard-linked (same filesystem, O(files)
+           driver-side) under a ``_tmp-spj-*`` dir using Spark's
+           bucketed-file naming (``part-...-..._NNNNN.parquet`` — bucket id
+           parsed from the name), and
+        2. that dir is registered as an EXTERNAL ``CLUSTERED BY`` parquet
+           table, resolved, and the catalog entry dropped at once: the
+           resolved relation keeps its file listing, so no catalog state
+           outlives this call.
+
+        Sound because :meth:`write_bucket_files` buckets rows by
+        ``pmod(F.hash(bucket_cols), num_buckets)`` — the identical murmur3
+        ``partitionIdExpression`` Spark's own bucketed writer uses, so the
+        declared layout is the physical truth.
+
+        ``link_dir=None`` uses the snapshot's shared dir, named by the
+        manifest version and the file set: built once, published by
+        atomic rename, reused (its mtime renewed) by repeat reads of that
+        snapshot. It must outlive the lazy DataFrame — its hard links keep
+        the snapshot's files alive across later compactions and vacuums —
+        so it is left to :meth:`vacuum`'s ``_tmp-spj-`` sweep under
+        ``min_age_sec``. A caller passing its own ``link_dir`` owns it and
+        removes it. Returns ``None`` when ``files`` is empty."""
+        if not files:
+            return None
+        token = uuid.uuid4().hex[:12]
+
+        def link_into(d: str) -> None:
+            os.makedirs(d)
+            for i, (b, rel) in enumerate(files):
+                os.link(os.path.join(self.path, rel),
+                        os.path.join(d, f"part-{i:05d}-{token}_{b:05d}.parquet"))
+
+        if link_dir is not None:
+            link_into(link_dir)
+        else:
+            snap = hashlib.md5(repr(files).encode()).hexdigest()[:12]
+            link_dir = os.path.join(
+                self.path, f"_tmp-spj-v{manifest['version']:012d}-{snap}"
+            )
+            if os.path.isdir(link_dir):
+                os.utime(link_dir)  # restart vacuum's grace period
+            else:
+                tmp = os.path.join(self.path, f"_tmp-spj-{token}")
+                try:
+                    link_into(tmp)
+                    os.rename(tmp, link_dir)
+                except OSError:
+                    shutil.rmtree(tmp, ignore_errors=True)
+                    if not os.path.isdir(link_dir):
+                        raise  # not a concurrent reader publishing it first
+        fields = manifest["fields"]
+        phys = {f["logical"]: f["physical"] for f in fields}
+        physical = _struct_from_fields([(f["physical"], f["type"]) for f in fields])
+        ddl = ", ".join(
+            f"`{fld.name}` {fld.dataType.simpleString()}" for fld in physical.fields
+        )
+        # same column list bucket_expr hashes — one source of truth
+        cluster_cols = ", ".join(f"`{phys[c]}`" for c in self.bucket_source_cols())
+        tbl = f"pw_spj_{token}"
+        self.spark.sql(
+            f"CREATE TABLE {tbl} ({ddl}) USING parquet "
+            f"CLUSTERED BY ({cluster_cols}) INTO {self.num_buckets} BUCKETS "
+            f"LOCATION '{link_dir}'"
+        )
+        try:
+            df = self.spark.table(tbl)
+        finally:
+            self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        return df.select(*[F.col(f["physical"]).alias(f["logical"]) for f in fields])
+
     @contextlib.contextmanager
     def scan_clustered(
         self,
@@ -506,30 +611,16 @@ class LakeTable:
         stats_filter: dict | None = None,
     ):
         """Storage-partitioned read: yield a DataFrame whose SCAN declares
-        the table's hash-bucket layout to Catalyst —
-        ``HashPartitioning(bucket_cols, num_buckets)`` — so a merge join
-        keyed on the bucket columns does NOT re-shuffle the target side
-        (measured: 95% of the merge's shuffle bytes, scripts/
-        spj_experiment.py). This is the same contract Iceberg's
-        storage-partitioned joins / DSv2 ``KeyGroupedPartitioning`` expose;
-        here it needs no JVM connector:
-
-        1. the manifest's base files for the selected buckets are
-           hard-linked (same filesystem, O(files) driver-side) under a
-           temp dir using Spark's bucketed-file naming
-           (``part-...-..._NNNNN.parquet`` — bucket id parsed from the
-           name), and
-        2. registered as a session-scoped EXTERNAL ``CLUSTERED BY``
-           parquet table.
-
-        Sound because :meth:`write_bucket_files` buckets rows by
-        ``pmod(F.hash(bucket_cols), num_buckets)`` — the identical murmur3
-        ``partitionIdExpression`` Spark's own bucketed writer uses, so the
-        declared layout is the physical truth.
+        the table's hash-bucket layout to Catalyst (see
+        :meth:`_bucketed_relation`), so a merge join keyed on the bucket
+        columns does NOT re-shuffle the target side (measured: 95% of the
+        merge's shuffle bytes, scripts/spj_experiment.py).
 
         Yields ``None`` when the fast path does not apply: outstanding MoR
-        deltas in the selected buckets (their resolution shuffles anyway)
-        or no base files. The temp table and link dir are dropped on exit.
+        deltas in the selected buckets (the caller's join would need
+        their resolved state — :meth:`read` resolves them per bucket) or
+        no base files. The link dir is private to this scan and removed
+        on exit; no catalog entry outlives the relation's resolution.
 
         ``stats_filter`` (see :meth:`read`) additionally skips files whose
         footer bounds miss the range — sound for the bucket declaration
@@ -542,63 +633,20 @@ class LakeTable:
         bounded by the hash distribution, not by hot keys.
         """
         manifest = self.manifest
-        keys = (
-            [str(b) for b in buckets]
-            if buckets is not None
-            else sorted(manifest["buckets"])
-        )
-        delta_map = manifest.get("deltas", {})
-        if any(delta_map.get(k) for k in keys):
+        keys = (sorted(manifest["buckets"]) if buckets is None
+                else [str(b) for b in buckets])
+        if any(manifest.get("deltas", {}).get(k) for k in keys):
             yield None
             return
-        norm_filter = (
-            self._normalize_stats_filter(manifest, stats_filter)
-            if stats_filter
-            else None
-        )
-        files = [
-            (int(k), rel)
-            for k in keys
-            for rel in manifest["buckets"].get(k, [])
-            if norm_filter is None
-            or self._stats_keep(manifest, rel, norm_filter)
-        ]
-        if not files:
-            yield None
-            return
-        fields = manifest["fields"]
-        token = uuid.uuid4().hex[:12]
-        link_dir = os.path.join(self.path, f"_tmp-spj-{token}")
-        os.makedirs(link_dir)
-        tbl = f"pw_spj_{token}"
+        link_dir = os.path.join(self.path, f"_tmp-spj-{uuid.uuid4().hex[:12]}")
         try:
-            for i, (b, rel) in enumerate(files):
-                os.link(
-                    os.path.join(self.path, rel),
-                    os.path.join(link_dir, f"part-{i:05d}-{token}_{b:05d}.parquet"),
-                )
-            ddl = ", ".join(
-                f"`{fld.name}` {fld.dataType.simpleString()}"
-                for fld in self.physical_schema.fields
+            df = self._bucketed_relation(
+                manifest,
+                self._files(manifest, keys, stats_filter=stats_filter),
+                link_dir,
             )
-            phys = {f["logical"]: f["physical"] for f in fields}
-            # same column list bucket_expr hashes — one source of truth
-            cluster_cols = ", ".join(
-                f"`{phys[c]}`" for c in self.bucket_source_cols()
-            )
-            self.spark.sql(
-                f"CREATE TABLE {tbl} ({ddl}) USING parquet "
-                f"CLUSTERED BY ({cluster_cols}) INTO {self.num_buckets} BUCKETS "
-                f"LOCATION '{link_dir}'"
-            )
-            df = self.spark.table(tbl).select(
-                *[F.col(f["physical"]).alias(f["logical"]) for f in fields]
-            )
-            if not manifest["properties"].get("soft_delete", False):
-                df = df.where(F.col(SDC_DELETED_AT).isNull())
-            yield df
+            yield None if df is None else _hide_tombstones(df, manifest)
         finally:
-            self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
             shutil.rmtree(link_dir, ignore_errors=True)
 
     # ---------------------------------------------------------------- write
@@ -921,29 +969,23 @@ class LakeTable:
                     name, F.lit(None).cast(METADATA_TYPES[name])
                 )
         prepared = prepared.withColumn("_bucket", self.bucket_expr())
-        obs = None
-        if self.key_cols:
-            from pyspark.sql import Observation
-
+        if not self.key_cols:
+            added = self.write_bucket_files(prepared)
+        else:
             obs = Observation("overwrite")
-            prepared = prepared.observe(
-                obs,
+            aggs = [
                 F.sum(
                     F.when(any_null_key(self.key_cols), 1).otherwise(0)
-                ).alias("null_keys"),
-            )
-        added = self.write_bucket_files(prepared)
-        # empty snapshot (a valid overwrite: "the table is now empty"):
-        # no files were written, so no rows and no null keys — and the
-        # Observation row may never have materialized (Spark's
-        # Observation.get raises a JVM toPyRow assertion when the
-        # observed node produced no output), so don't touch it
-        if obs is not None and added and int(obs.get.get("null_keys") or 0):
-            raise NullKeyError(
-                f"{int(obs.get['null_keys'])} snapshot row(s) carry NULL "
-                f"in a primary-key column {self.key_cols}; keyed tables "
-                f"must have non-null keys (merge joins on ==)"
-            )
+                ).alias("null_keys")
+            ]
+            added = self.write_bucket_files(prepared.observe(obs, *aggs))
+            n_null = int(observed_metrics(obs, prepared, aggs)["null_keys"] or 0)
+            if n_null:
+                raise NullKeyError(
+                    f"{n_null} snapshot row(s) carry NULL "
+                    f"in a primary-key column {self.key_cols}; keyed tables "
+                    f"must have non-null keys (merge joins on ==)"
+                )
         return self.commit(
             added=added,
             overwrite_all=True,
@@ -1142,48 +1184,57 @@ class LakeTable:
         At scale this is the background optimize job; it bounds read
         amplification after many small merges.
 
-        File-count-only compaction (no outstanding deltas in the selected
-        buckets) runs SHUFFLE-FREE via :meth:`scan_clustered`: the
-        bucketed scan hands each task exactly one bucket's rows, so the
-        rewrite is scan → write with zero exchanges — at 100 TB the
-        optimize job moves no data over the network. Delta-folding
-        compaction still pays its last-per-key shuffle (inherent)."""
+        One plan for every compaction, with ZERO exchanges: the selected
+        buckets' base+delta files are scanned as one bucketed relation
+        (:meth:`_bucketed_relation`) that hands each task exactly one
+        bucket's rows, last-per-key resolves deltas inside that task,
+        and the resolved rows are written ``clustered`` — scan → resolve
+        → write, so at 100 TB the optimize job moves no data over the
+        network."""
         deltas = self.manifest.get("deltas", {})
         todo = sorted(
-            {
-                int(b)
-                for b, fl in self.manifest["buckets"].items()
-                if len(fl) > max_files_per_bucket
-            }
+            {int(b) for b, fl in self.manifest["buckets"].items()
+             if len(fl) > max_files_per_bucket}
             | {int(b) for b, fl in deltas.items() if fl}
         )
         if not todo:
             return None
-        has_deltas = any(deltas.get(str(b)) for b in todo)
-        with contextlib.ExitStack() as stack:
-            df = None
-            if not has_deltas:
-                df = stack.enter_context(self.scan_clustered(buckets=todo))
-            clustered = df is not None
-            if clustered:
-                # a bare scan→write has no required distribution, so
-                # autoBucketedScan would silently fall back to a plain
-                # file scan (one partition per FILE, buckets interleaved
-                # across tasks); force the bucketed scan for the rewrite
-                key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-                old = self.spark.conf.get(key)
-                self.spark.conf.set(key, "false")
-                stack.callback(self.spark.conf.set, key, old)
-            if df is None:
-                df = self.read(buckets=todo)
-            df = df.withColumn("_bucket", self.bucket_expr())
-            added = self.write_bucket_files(df, clustered=clustered)
-            return self.commit(
-                added=added,
-                replaced_buckets=todo,
-                summary={"operation": "compact", "buckets": todo,
-                         "clustered": clustered},
+        keys = [str(b) for b in todo]
+        # the rewrite finishes inside this call, so its links are private
+        link_dir = os.path.join(self.path, f"_tmp-spj-{uuid.uuid4().hex[:12]}")
+        # a bare scan→write (nothing to resolve) has no required
+        # distribution, so autoBucketedScan would silently fall back to a
+        # plain file scan (one partition per FILE, buckets interleaved
+        # across tasks); force the bucketed scan for the rewrite
+        key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+        old = self.spark.conf.get(key)
+        self.spark.conf.set(key, "false")
+        try:
+            files = self._files(self.manifest, keys)
+            df = self._bucketed_relation(self.manifest, files, link_dir)
+            if self.key_cols and any(deltas.get(k) for k in keys):
+                df = latest_per_key(df, self.key_cols, lsn_col=LSN_COL)
+            df = _hide_tombstones(df, self.manifest).withColumn(
+                "_bucket", self.bucket_expr()
             )
+            added = self.write_bucket_files(df, clustered=True)
+        finally:
+            self.spark.conf.set(key, old)
+            shutil.rmtree(link_dir, ignore_errors=True)
+        return self.commit(
+            added=added,
+            replaced_buckets=todo,
+            summary={"operation": "compact", "buckets": todo,
+                     "clustered": True},
+        )
+
+
+def _hide_tombstones(df: DataFrame, manifest: dict) -> DataFrame:
+    """Drop rows whose winning record is a tombstone, unless the table
+    keeps them visible (``soft_delete`` property)."""
+    if manifest["properties"].get("soft_delete", False):
+        return df
+    return df.where(F.col(SDC_DELETED_AT).isNull())
 
 
 def _stat_value(v):

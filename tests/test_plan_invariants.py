@@ -2,14 +2,21 @@
 audited with .explain(), frozen as regressions: column pruning reaches
 the scan, filters push down to parquet, small dims broadcast, LSH joins
 are equi-joins (no cartesian product), aggregates partial-aggregate
-map-side, and expressions stay inside whole-stage codegen."""
+map-side, expressions stay inside whole-stage codegen, and merge-on-read
+resolution (reads and delta compaction) runs bucket-locally with no
+exchange."""
 
 from __future__ import annotations
 
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
+from pipelinewise_spark.cdc.events import TRANSCRIPT_KEY, TRANSCRIPT_SCHEMA
+from pipelinewise_spark.cdc.gen import generate_change_events
+from pipelinewise_spark.cdc.merge import merge_into
+from pipelinewise_spark.lake.table import LakeTable
 from pipelinewise_spark.queries import QUERIES
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
@@ -103,3 +110,60 @@ def test_cross_joins_are_broadcast_only(spark, name):
     for ln in plan.splitlines():
         if ", Cross" in ln or " Cross," in ln:
             assert "BroadcastNestedLoopJoin" in ln, f"{name}: shuffled cross join: {ln}"
+
+
+def _sql_plans(spark, action) -> list[str]:
+    """Physical plans of the SQL executions ``action`` runs, as the
+    session's SQL status store recorded them (writes included)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def last_id():
+        n = store.executionsCount()
+        return store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+
+    first = last_id()
+    action()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    n = store.executionsCount()
+    ex = store.executionsList(max(0, n - 100), 100)
+    return [
+        ex.apply(i).physicalPlanDescription()
+        for i in range(ex.size())
+        if ex.apply(i).executionId() > first
+    ]
+
+
+def _mor_table(spark, path, **create_kw) -> LakeTable:
+    """A CoW base plus two outstanding MoR delta batches."""
+    ev = generate_change_events(spark, n_convs=20, turns_per_conv=4,
+                                n_updates=80, delete_pct=10)
+    t = LakeTable.create(spark, path, TRANSCRIPT_SCHEMA, TRANSCRIPT_KEY,
+                         num_buckets=4, **create_kw)
+    merge_into(t, ev.where(F.col("lsn") <= 80), batch_id=0, stream="s")
+    merge_into(t, ev.where((F.col("lsn") > 80) & (F.col("lsn") <= 120)),
+               batch_id=1, stream="s", mode="mor")
+    merge_into(t, ev.where(F.col("lsn") > 120), batch_id=2, stream="s",
+               mode="mor")
+    assert t.delta_pressure()["max_chain"] >= 2
+    return t
+
+
+@pytest.mark.parametrize("create_kw", [{}, {"bucket_col": "conv_id"}],
+                         ids=["key_buckets", "conv_id_buckets"])
+def test_mor_read_resolves_without_exchange(spark, tmp_path, create_kw):
+    t = _mor_table(spark, str(tmp_path / "t"), **create_kw)
+    plans = _sql_plans(
+        spark, lambda: t.read().write.format("noop").mode("overwrite").save()
+    )
+    [plan] = [p for p in plans if "Scan parquet" in p]
+    assert "Bucketed: true" in plan, plan
+    assert "Exchange" not in plan, plan
+
+
+def test_delta_compaction_writes_without_exchange(spark, tmp_path):
+    t = _mor_table(spark, str(tmp_path / "t"))
+    plans = _sql_plans(spark, t.compact)
+    [write] = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
+    assert "Bucketed: true" in write and "SortAggregate" in write, write
+    assert not any("Exchange" in p for p in plans), plans
+    assert not any(t.manifest["deltas"].values())

@@ -38,7 +38,7 @@ def test_compact_file_count_uses_clustered_scan(spark, tmp_path):
     assert all(len(fl) <= 1 for fl in t.manifest["buckets"].values())
 
 
-def test_compact_with_deltas_falls_back(spark, tmp_path):
+def test_compact_with_deltas_is_clustered(spark, tmp_path):
     ev = generate_change_events(spark, n_convs=15, turns_per_conv=3, n_updates=30)
     t = LakeTable.create(spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA,
                          TRANSCRIPT_KEY, num_buckets=4)
@@ -47,12 +47,12 @@ def test_compact_with_deltas_falls_back(spark, tmp_path):
         (r["conv_id"], r["turn_idx"], r["text"], r["_lsn"])
         for r in LakeTable(spark, str(tmp_path / "t")).read().collect()
     )
-    # MoR deltas force the (inherently shuffling) resolve path; an
+    # MoR deltas resolve per bucket inside the same clustered plan; an
     # older-LSN replay delta must fold away during compaction
     merge_into(t, ev.where(F.col("lsn") <= 20), batch_id="d", mode="mor",
                filter_applied_lsn=False)
     m = t.compact(max_files_per_bucket=64)
-    assert m is not None and m["summary"]["clustered"] is False
+    assert m is not None and m["summary"]["clustered"] is True
     assert not any(t.manifest.get("deltas", {}).values())
     after = sorted(
         (r["conv_id"], r["turn_idx"], r["text"], r["_lsn"]) for r in t.read().collect()

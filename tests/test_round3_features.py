@@ -419,3 +419,23 @@ def test_mongo_replace_treated_as_full_document_update(spark):
     assert mongo.updates_requiring_fetch(
         mongo.decode_change_stream(lines)
     ).count() == 0
+
+
+def test_unrolled_memo_is_bounded_lru_keyed_by_context(spark, monkeypatch):
+    from collections import OrderedDict
+
+    monkeypatch.setattr(ann, "_UNROLLED_CACHE", OrderedDict())
+    monkeypatch.setattr(ann, "_UNROLLED_CACHE_MAX", 3)
+    v = F.col("embedding")
+    first = ann.norm(v, dim=1)
+    assert ann.norm(v, dim=1) is first  # memo hit
+    ann.norm(v, dim=2)
+    ann.norm(v, dim=3)
+    ann.norm(v, dim=1)  # touch: dim=2 is now least recently used
+    ann.norm(v, dim=4)
+    assert len(ann._UNROLLED_CACHE) == 3
+    assert [k[-1] for k in ann._UNROLLED_CACHE] == [3, 1, 4]
+    assert ann.norm(v, dim=1) is first
+    sc = spark.sparkContext
+    assert all(k[:2] == (id(sc._gateway), sc.applicationId)
+               for k in ann._UNROLLED_CACHE)

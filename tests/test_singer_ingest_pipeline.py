@@ -136,3 +136,45 @@ def test_quarantine_mode_diverts_malformed_records(spark, tmp_path):
     assert table.read().count() == table.read().select(
         "conv_id", "turn_idx").distinct().count()
     assert n_clean > 0
+
+
+def test_identical_schema_messages_reconcile_once(spark, tmp_path, monkeypatch):
+    """A batch of N singer files carries N identical SCHEMA lines per
+    stream: only a message that differs from the last one reconciled (or
+    meets changed table fields) runs the drift diff, and the resulting
+    schema equals reconciling every message in order."""
+    from pipelinewise_spark.evolution import drift
+
+    base = sschema.struct_to_jsonschema(TRANSCRIPT_SCHEMA)
+    wide = sschema.struct_to_jsonschema(
+        StructType(list(TRANSCRIPT_SCHEMA.fields)
+                   + [StructField("lang", StringType())])
+    )
+    msgs = [{"type": "SCHEMA", "stream": "s", "schema": js}
+            for js in [base] * 3 + [wide] * 2 + [base] * 2]
+    ctrl = {"SCHEMA": msgs, "STATE": [], "ACTIVATE_VERSION": []}
+    events = generate_change_events(spark, n_convs=4, turns_per_conv=2,
+                                    n_updates=0)
+    f = str(tmp_path / "part.jsonl")
+    protocol.write_singer_file(events, PAYLOAD_COLS, "s", base,
+                               TRANSCRIPT_KEY, f)
+
+    calls = []
+    real = drift.reconcile
+    monkeypatch.setattr(drift, "reconcile",
+                        lambda t, p, **kw: calls.append(p) or real(t, p, **kw))
+    table = LakeTable.create(spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA,
+                             TRANSCRIPT_KEY, num_buckets=2)
+    pipe = CdcPipeline(table, stream="s")
+    pipe.ingest_singer_lines(spark.read.text(f), batch_id=0, _ctrl=ctrl)
+    assert len(calls) == 3  # base, wide, base
+    pipe.ingest_singer_lines(spark.read.text(f), batch_id=1, _ctrl=ctrl)
+    # the leading base repeats the last one reconciled on unchanged
+    # fields and is skipped; wide and the trailing base reconcile
+    assert len(calls) == 5
+
+    twin = LakeTable.create(spark, str(tmp_path / "twin"), TRANSCRIPT_SCHEMA,
+                            TRANSCRIPT_KEY, num_buckets=2)
+    for m in msgs + msgs:
+        real(twin, sschema.jsonschema_to_struct(m["schema"]))
+    assert table.manifest["fields"] == twin.manifest["fields"]
