@@ -16,41 +16,22 @@ handling covers the residual case of one hot (conv_id, turn_idx) pair.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def latest_per_key(
-    df: DataFrame,
-    key_cols: list[str],
-    lsn_col: str = "lsn",
-    tiebreak_cols: list[str] | None = None,
-    use_window: bool = False,
-) -> DataFrame:
+def latest_per_key(df: DataFrame, key_cols: list[str], lsn_col: str = "lsn") -> DataFrame:
     """Last change per PK by LSN. Equal-LSN rows are verbatim replays of
     the same log record (at-least-once upstream), so any of them may win.
 
-    Default path is ``max_by`` (hash aggregate): partial aggregation
-    collapses duplicates map-side BEFORE the shuffle and needs no sort —
-    at 10^10-event scale with replay overlap this cuts shuffle volume by
-    the duplicate factor, where the window formulation always shuffles
-    every row and sorts each partition. ``use_window=True`` keeps the
-    row_number formulation (useful when the plan already has a compatible
-    partitioning to reuse)."""
-    if use_window:
-        order = [F.col(lsn_col).desc()] + [
-            F.col(c).desc() for c in (tiebreak_cols or [])
-        ]
-        w = Window.partitionBy(*[F.col(k) for k in key_cols]).orderBy(*order)
-        return (
-            df.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+    A ``max_by`` hash aggregate: partial aggregation collapses duplicates
+    map-side BEFORE the shuffle and needs no sort — at 10^10-event scale
+    with replay overlap this cuts shuffle volume by the duplicate factor,
+    where the ``row_number`` window formulation always shuffles every row
+    and sorts each partition."""
     others = [c for c in df.columns if c not in key_cols]
-    ordering = F.struct(F.col(lsn_col), *[F.col(c) for c in (tiebreak_cols or [])])
     return (
         df.groupBy(*[F.col(k) for k in key_cols])
-        .agg(F.max_by(F.struct(*others), ordering).alias("__winner"))
+        .agg(F.max_by(F.struct(*others), F.struct(F.col(lsn_col))).alias("__winner"))
         .select(*key_cols, "__winner.*")
     )

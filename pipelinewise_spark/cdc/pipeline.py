@@ -31,53 +31,77 @@ from pipelinewise_spark.cdc.merge import merge_into
 from pipelinewise_spark.lake.table import LakeTable
 
 
-def _stream_source(
-    spark: SparkSession,
-    path: str,
-    *,
-    fmt: str = "parquet",
-    schema: StructType | None = None,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Shared reader head for the run_*_stream methods: one place to
-    grow reader options (latestFirst, pathGlobFilter, ...) instead of
-    four. ``fmt="text"`` needs no schema (singer frames); everything
-    else defaults to the change-event envelope."""
-    reader = spark.readStream
-    if fmt != "text":
-        reader = reader.schema(schema or CHANGE_EVENT_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return getattr(reader, fmt)(path)
+class _StreamRunner:
+    """The streaming entry points of :class:`CdcPipeline` and
+    :class:`MultiStreamPipeline`: one file-source micro-batch stream whose
+    ``foreachBatch`` is the class's own ``apply_batch`` (change-event
+    files) or ``ingest_singer_lines`` (singer text frames)."""
+
+    def run_file_stream(
+        self,
+        path: str,
+        checkpoint_dir: str,
+        *,
+        fmt: str = "parquet",
+        schema: StructType | None = None,
+        available_now: bool = True,
+        processing_time: str | None = None,
+        max_files_per_trigger: int | None = None,
+        timeout_sec: float | None = None,
+    ):
+        """Tail a directory of change-event files (the sandbox stand-in for
+        a binlog/WAL/Kafka source; swapping in ``format("kafka")`` changes
+        nothing downstream), read with ``schema`` (default: the
+        change-event envelope) and applied by ``apply_batch``.
+        ``fmt="text"`` reads singer frames instead (see
+        :meth:`run_singer_stream`).
+
+        ``available_now=True`` (default) is the reference's bounded run:
+        drain what the directory holds, await (up to ``timeout_sec``) and
+        return the finished query; kill + rerun with the same checkpoint
+        resumes exactly where it stopped (tests/test_streaming_resume.py).
+        ``available_now=False`` starts a continuous tail, triggered every
+        ``processing_time`` when given, and returns the live query for the
+        caller to await or stop."""
+        reader = self.spark.readStream
+        if fmt == "text":
+            handle = self.ingest_singer_lines
+        else:
+            handle = self.apply_batch
+            reader = reader.schema(schema or CHANGE_EVENT_SCHEMA)
+        if max_files_per_trigger:
+            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+        writer = (
+            getattr(reader, fmt)(path)
+            .writeStream.foreachBatch(lambda df, bid: handle(df, batch_id=bid))
+            .option("checkpointLocation", checkpoint_dir)
+        )
+        if available_now:
+            writer = writer.trigger(availableNow=True)
+        elif processing_time:
+            writer = writer.trigger(processingTime=processing_time)
+        query = writer.start()
+        if available_now:
+            query.awaitTermination(timeout_sec)
+        return query
+
+    def run_singer_stream(self, frames_path: str, checkpoint_dir: str, **kw):
+        """Tail a directory of singer-framed TEXT files (SCHEMA / RECORD
+        / STATE lines — what ``jobs/run_feed.py --export-format singer``
+        emits, or any reference tap's stdout captured to files) and run
+        each micro-batch through ``ingest_singer_lines``: SCHEMA messages
+        drive drift mid-stream, RECORDs decode under the pipeline's
+        ``validate`` mode (incl. the quarantine dead-letter path). Frame
+        ORDER within a batch doesn't matter — control messages are
+        collected wholesale and records fold last-per-key by LSN — so the
+        distributed text read needs no ordering guarantee. Exactly-once is
+        the same two-layer guard as every other source: Spark's checkpoint
+        + the manifest batch-id guard. ``kw`` are
+        :meth:`run_file_stream`'s trigger options."""
+        return self.run_file_stream(frames_path, checkpoint_dir, fmt="text", **kw)
 
 
-def _start_stream(
-    source: DataFrame,
-    handle,
-    checkpoint_dir: str,
-    *,
-    available_now: bool = True,
-    processing_time: str | None = None,
-    timeout_sec: float | None = None,
-):
-    """Shared stream-runner tail: foreachBatch + checkpoint + trigger
-    selection + (for bounded runs) the await. ``availableNow`` = the
-    reference's bounded run; kill + rerun with the same checkpoint
-    resumes exactly. One definition for all four run_*_stream methods."""
-    writer = source.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    query = writer.start()
-    if available_now:
-        query.awaitTermination(timeout_sec)
-    return query
-
-
-class CdcPipeline:
+class CdcPipeline(_StreamRunner):
     def __init__(
         self,
         table: LakeTable,
@@ -422,70 +446,12 @@ class CdcPipeline:
             out.append(self.apply_batch(batch, batch_id=f"replay-{lo}-{hi}"))
         return out
 
-    # ------------------------------------------------------------ streaming
-
-    def run_file_stream(
-        self,
-        events_path: str,
-        checkpoint_dir: str,
-        *,
-        fmt: str = "parquet",
-        schema: StructType | None = None,
-        available_now: bool = True,
-        processing_time: str | None = None,
-        max_files_per_trigger: int | None = None,
-        timeout_sec: float | None = None,
-    ):
-        """Tail a directory of change-event files (the sandbox stand-in for
-        a binlog/WAL/Kafka source; swapping in ``format("kafka")`` changes
-        nothing downstream). ``availableNow`` = the reference's bounded run;
-        kill + rerun with the same checkpoint resumes exactly where it
-        stopped (tested in tests/test_streaming_resume.py)."""
-        source = _stream_source(
-            self.table.spark, events_path, fmt=fmt, schema=schema,
-            max_files_per_trigger=max_files_per_trigger,
-        )
-        return _start_stream(
-            source, lambda df, bid: self.apply_batch(df, batch_id=bid),
-            checkpoint_dir, available_now=available_now,
-            processing_time=processing_time, timeout_sec=timeout_sec,
-        )
-
-    def run_singer_stream(
-        self,
-        frames_path: str,
-        checkpoint_dir: str,
-        *,
-        available_now: bool = True,
-        processing_time: str | None = None,
-        max_files_per_trigger: int | None = None,
-        timeout_sec: float | None = None,
-    ):
-        """Tail a directory of singer-framed TEXT files (SCHEMA / RECORD
-        / STATE lines — what ``jobs/run_feed.py --export-format singer``
-        emits, or any reference tap's stdout captured to files) and run
-        each micro-batch through :meth:`ingest_singer_lines`: SCHEMA
-        messages drive drift mid-stream, RECORDs decode under the
-        pipeline's ``validate`` mode (incl. the quarantine dead-letter
-        path). Frame ORDER within a batch doesn't matter — control
-        messages are collected wholesale and records fold last-per-key
-        by LSN — so the distributed text read needs no ordering
-        guarantee. Exactly-once is the same two-layer guard as every
-        other source: Spark's checkpoint + the manifest batch-id
-        guard."""
-        source = _stream_source(
-            self.table.spark, frames_path, fmt="text",
-            max_files_per_trigger=max_files_per_trigger,
-        )
-        return _start_stream(
-            source,
-            lambda df, bid: self.ingest_singer_lines(df, batch_id=bid),
-            checkpoint_dir, available_now=available_now,
-            processing_time=processing_time, timeout_sec=timeout_sec,
-        )
+    @property
+    def spark(self) -> SparkSession:
+        return self.table.spark
 
 
-class MultiStreamPipeline:
+class MultiStreamPipeline(_StreamRunner):
     """Routes a mixed change stream (many tables in one log — the
     reference's combined binlog pass over all LOG_BASED streams,
     ``tap_mysql/.../binlog.py:857-897``) to one LakeTable per stream.
@@ -531,6 +497,10 @@ class MultiStreamPipeline:
         #: (snapshot captured after lsn0) before its log tail applies;
         #: bookmarked streams tail directly. None disables routing.
         self.snapshot_provider = snapshot_provider
+
+    @property
+    def spark(self) -> SparkSession:
+        return next(iter(self.pipelines.values())).table.spark
 
     def _route_initial_loads(self) -> dict[str, dict]:
         """Send every stream lacking a committed bookmark through
@@ -644,46 +614,3 @@ class MultiStreamPipeline:
             )
         finally:
             lines.unpersist()
-
-    def run_file_stream(self, events_path: str, checkpoint_dir: str, **kw):
-        """Same contract as :meth:`CdcPipeline.run_file_stream`:
-        ``available_now=True`` (default) drains and awaits; with
-        ``available_now=False`` + ``processing_time`` it starts a
-        continuous tail and returns the live query (caller awaits)."""
-        spark = next(iter(self.pipelines.values())).table.spark
-        from pyspark.sql import SparkSession  # noqa: F401
-
-        available_now = kw.pop("available_now", True)
-        processing_time = kw.pop("processing_time", None)
-        source = _stream_source(
-            spark, events_path,
-            fmt=kw.pop("fmt", "parquet"), schema=kw.pop("schema", None),
-            max_files_per_trigger=kw.get("max_files_per_trigger"),
-        )
-        return _start_stream(
-            source, lambda df, bid: self.apply_batch(df, batch_id=bid),
-            checkpoint_dir, available_now=available_now,
-            processing_time=processing_time,
-            timeout_sec=kw.get("timeout_sec"),
-        )
-
-    def run_singer_stream(
-        self, frames_path: str, checkpoint_dir: str, **kw
-    ):
-        """Tail a directory of MIXED-stream singer text files (one tap's
-        whole stdout) — :meth:`CdcPipeline.run_singer_stream`, fanned
-        out per stream via :meth:`ingest_singer_lines`."""
-        spark = next(iter(self.pipelines.values())).table.spark
-        available_now = kw.pop("available_now", True)
-        processing_time = kw.pop("processing_time", None)
-        source = _stream_source(
-            spark, frames_path, fmt="text",
-            max_files_per_trigger=kw.get("max_files_per_trigger"),
-        )
-        return _start_stream(
-            source,
-            lambda df, bid: self.ingest_singer_lines(df, batch_id=bid),
-            checkpoint_dir, available_now=available_now,
-            processing_time=processing_time,
-            timeout_sec=kw.get("timeout_sec"),
-        )

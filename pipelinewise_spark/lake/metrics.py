@@ -13,21 +13,14 @@ the manifest chain IS the metrics store.
 from __future__ import annotations
 
 import json
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from pipelinewise_spark.lake.table import MANIFEST_DIR, LakeTable
+from pipelinewise_spark.lake.table import LakeTable, manifest_versions, read_manifest
 
 
 def manifest_history(table: LakeTable) -> list[dict]:
-    d = os.path.join(table.path, MANIFEST_DIR)
-    out = []
-    for name in sorted(os.listdir(d)):
-        if name.startswith("v") and name.endswith(".json"):
-            with open(os.path.join(d, name)) as fh:
-                out.append(json.load(fh))
-    return out
+    return [read_manifest(table.path, v) for v in manifest_versions(table.path)]
 
 
 def commit_metrics_df(spark: SparkSession, table: LakeTable) -> DataFrame:
@@ -67,7 +60,15 @@ def commit_metrics_df(spark: SparkSession, table: LakeTable) -> DataFrame:
 
 def file_lineage_df(spark: SparkSession, table: LakeTable) -> DataFrame:
     """One row per (commit, data file): the per-partition lineage —
-    which commit produced which bucket's file, with row/byte counts."""
+    which commit produced which bucket's file, with row/byte counts.
+    ``live``: the current snapshot references the file, as a base file or
+    as a merge-on-read delta."""
+    live = {
+        p
+        for fmap in (table.manifest["buckets"], table.manifest.get("deltas", {}))
+        for fl in fmap.values()
+        for p in fl
+    }
     rows = []
     for m in manifest_history(table):
         for f in m.get("summary", {}).get("added_files", []) or []:
@@ -79,12 +80,7 @@ def file_lineage_df(spark: SparkSession, table: LakeTable) -> DataFrame:
                     "bucket": f["bucket"],
                     "rows": f["rows"],
                     "bytes": f["bytes"],
-                    "live": f["path"]
-                    in {
-                        p
-                        for fl in table.manifest["buckets"].values()
-                        for p in fl
-                    },
+                    "live": f["path"] in live,
                 }
             )
     schema = (

@@ -37,7 +37,6 @@ Register once per session::
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql.datasource import (
@@ -47,20 +46,11 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from pipelinewise_spark.lake.table import MANIFEST_DIR, _struct_from_fields
-
-
-def _manifest_versions(path: str) -> list[int]:
-    d = os.path.join(path, MANIFEST_DIR)
-    return sorted(
-        int(n[1:-5])
-        for n in os.listdir(d)
-        if n.startswith("v") and n.endswith(".json")
-    )
-
-def _load_manifest(path: str, version: int) -> dict:
-    with open(os.path.join(path, MANIFEST_DIR, f"v{version:012d}.json")) as fh:
-        return json.load(fh)
+from pipelinewise_spark.lake.table import (
+    _struct_from_fields,
+    manifest_versions,
+    read_manifest,
+)
 
 
 class _LakeTableStreamReader(DataSourceStreamReader):
@@ -71,8 +61,8 @@ class _LakeTableStreamReader(DataSourceStreamReader):
     def __init__(self, schema: StructType, options: dict):
         opts = {k.lower(): v for k, v in options.items()}
         self.path = os.path.abspath(options["path"])
-        self.fields = _load_manifest(
-            self.path, _manifest_versions(self.path)[-1]
+        self.fields = read_manifest(
+            self.path, manifest_versions(self.path)[-1]
         )["fields"]
         # small files PACK into shared partitions up to this many bytes
         # (per-task Python-worker startup dominates tiny-file reads —
@@ -85,10 +75,10 @@ class _LakeTableStreamReader(DataSourceStreamReader):
         # start tailing AFTER the current version by default ("latest",
         # the change-feed convention); option startingVersion=0 replays
         # history from the beginning
-        return {"version": _manifest_versions(self.path)[-1]}
+        return {"version": manifest_versions(self.path)[-1]}
 
     def latestOffset(self) -> dict:
-        latest = _manifest_versions(self.path)[-1]
+        latest = manifest_versions(self.path)[-1]
         if latest < self._max_seen:
             raise RuntimeError(
                 f"change-feed table at {self.path} moved backward "
@@ -103,7 +93,7 @@ class _LakeTableStreamReader(DataSourceStreamReader):
         rels: list[tuple[str, int]] = []
         for v in range(after + 1, upto + 1):
             try:
-                m = _load_manifest(self.path, v)
+                m = read_manifest(self.path, v)
             except FileNotFoundError:
                 # vacuum(keep_versions=N) also drops superseded manifests
                 # — a consumer lagging past retention must ERROR, never
@@ -237,7 +227,7 @@ class LakeTableStreamSource(DataSource):
 
     def schema(self) -> StructType:
         path = os.path.abspath(self.options["path"])
-        fields = _load_manifest(path, _manifest_versions(path)[-1])["fields"]
+        fields = read_manifest(path, manifest_versions(path)[-1])["fields"]
         return _struct_from_fields(
             [(f["logical"], f["type"]) for f in fields]
         )

@@ -44,6 +44,7 @@ import hashlib
 import json
 import os
 import shutil
+import threading
 import time
 import uuid
 from typing import Any
@@ -61,7 +62,8 @@ class NullKeyError(ValueError):
     keyed write path — merge (CoW and MoR) and snapshot ``overwrite`` —
     because the merge join uses plain ``==`` on the keys and a null-key
     row admitted by any path would become a permanent zombie no later
-    merge could match, update, or delete."""
+    merge could match, update, or delete. Raised by
+    :meth:`LakeTable.write_observed`, the write every such path uses."""
 
 
 def any_null_key(key_cols: list[str], prefix: str = "") -> Column:
@@ -72,29 +74,6 @@ def any_null_key(key_cols: list[str], prefix: str = "") -> Column:
         c = F.col(f"{prefix}{k}").isNull()
         cond = c if cond is None else (cond | c)
     return cond
-
-
-def observed_metrics(obs: Observation, df: DataFrame, aggs: list) -> dict:
-    """``obs.get`` for an Observation on ``df`` with aggregates ``aggs``,
-    with one fallback for every observed write path.
-
-    AQE's empty-relation propagation can replace the subtree feeding a
-    write with an empty LocalRelation when it turns out to produce zero
-    rows — e.g. an empty snapshot ``overwrite``, or a merge in which every
-    surviving row of the affected buckets was deleted, under the
-    non-aligned (``bucket_col``) layout whose write adds a salted
-    repartition. That elimination takes the ``CollectMetrics`` node with
-    it, leaving the observation holding a schema-less empty row that
-    ``Observation.get`` cannot decode (``toPyRow`` assertion). The DATA
-    outcome is correct (an empty write); only the metrics are lost — so
-    re-run the same aggregate expressions directly against the
-    pre-observe frame ``df``: the plan is deterministic, and the
-    recompute is cheap exactly when this fires (the plan just proved it
-    yields ~no output)."""
-    try:
-        return obs.get
-    except Exception:
-        return df.agg(*aggs).first().asDict()
 
 
 MANIFEST_DIR = "_manifests"
@@ -227,25 +206,16 @@ class LakeTable:
 
     @classmethod
     def exists(cls, path: str) -> bool:
-        d = os.path.join(os.path.abspath(path), MANIFEST_DIR)
-        return os.path.isdir(d) and any(
-            n.startswith("v") and n.endswith(".json") for n in os.listdir(d)
-        )
+        return bool(manifest_versions(os.path.abspath(path)))
 
     def _load_current_manifest(self) -> dict:
-        d = os.path.join(self.path, MANIFEST_DIR)
-        versions = sorted(
-            n for n in os.listdir(d) if n.startswith("v") and n.endswith(".json")
-        )
+        versions = manifest_versions(self.path)
         if not versions:
-            raise FileNotFoundError(f"no manifest under {d}")
-        with open(os.path.join(d, versions[-1])) as fh:
-            return _assemble_manifest(self.path, json.load(fh))
+            raise FileNotFoundError(f"no manifest under {self.path}")
+        return self.load_manifest(versions[-1])
 
     def load_manifest(self, version: int) -> dict:
-        p = os.path.join(self.path, MANIFEST_DIR, f"v{version:012d}.json")
-        with open(p) as fh:
-            return _assemble_manifest(self.path, json.load(fh))
+        return _assemble_manifest(self.path, read_manifest(self.path, version))
 
     def refresh(self) -> "LakeTable":
         self.manifest = self._load_current_manifest()
@@ -722,6 +692,62 @@ class LakeTable:
         shutil.rmtree(tmp, ignore_errors=True)
         return added
 
+    def write_observed(
+        self,
+        df: DataFrame,
+        aggs: list[Column],
+        *,
+        null_key: Column | None = None,
+        keep: Column | None = None,
+        n_partitions: int | None = None,
+        clustered: bool = False,
+    ) -> tuple[dict[str, list[str]], dict]:
+        """Write the rows of ``df`` that match ``keep`` (all, if None)
+        with :meth:`write_bucket_files` (``_bucket`` is added here), while
+        ``DataFrame.observe`` computes ``aggs`` over ALL of ``df`` on the
+        same pass — no second scan. Returns (added files, aggregate
+        values). Does NOT publish — call ``commit``.
+
+        ``null_key`` is the primary-key NULL predicate: matching rows are
+        counted on the same pass, and any raises :class:`NullKeyError`
+        before the caller can commit (nothing publishes; the orphaned
+        files are reclaimed by ``vacuum``).
+
+        AQE's empty-relation propagation can replace the subtree feeding a
+        write with an empty LocalRelation when it turns out to produce zero
+        rows — e.g. an empty snapshot ``overwrite``, or a merge in which
+        every surviving row of the affected buckets was deleted, under the
+        non-aligned (``bucket_col``) layout whose write adds a salted
+        repartition. That elimination takes the ``CollectMetrics`` node
+        with it, leaving the observation holding a schema-less empty row
+        that ``Observation.get`` cannot decode (``toPyRow`` assertion).
+        The DATA outcome is correct (an empty write); only the metrics are
+        lost — so the same aggregates are re-run directly against ``df``:
+        the plan is deterministic, and the recompute is cheap exactly when
+        this fires (the plan just proved it yields ~no output)."""
+        if null_key is not None:
+            aggs = [*aggs, F.sum(F.when(null_key, 1).otherwise(0)).alias("null_keys")]
+        obs = Observation()
+        out = df.observe(obs, *aggs)
+        if keep is not None:
+            out = out.where(keep)
+        added = self.write_bucket_files(
+            out.withColumn("_bucket", self.bucket_expr()), n_partitions,
+            clustered=clustered,
+        )
+        try:
+            m = obs.get
+        except Exception:
+            m = df.agg(*aggs).first().asDict()
+        null_keys = int(m.pop("null_keys", 0) or 0)
+        if null_keys:
+            raise NullKeyError(
+                f"{null_keys} row(s) carry NULL in a primary-key column "
+                f"{self.key_cols}; keyed tables must have non-null keys "
+                f"(merges join on ==)"
+            )
+        return added, m
+
     def commit(
         self,
         *,
@@ -968,29 +994,16 @@ class LakeTable:
                 prepared = prepared.withColumn(
                     name, F.lit(None).cast(METADATA_TYPES[name])
                 )
-        prepared = prepared.withColumn("_bucket", self.bucket_expr())
-        if not self.key_cols:
-            added = self.write_bucket_files(prepared)
-        else:
-            obs = Observation("overwrite")
-            aggs = [
-                F.sum(
-                    F.when(any_null_key(self.key_cols), 1).otherwise(0)
-                ).alias("null_keys")
-            ]
-            added = self.write_bucket_files(prepared.observe(obs, *aggs))
-            n_null = int(observed_metrics(obs, prepared, aggs)["null_keys"] or 0)
-            if n_null:
-                raise NullKeyError(
-                    f"{n_null} snapshot row(s) carry NULL "
-                    f"in a primary-key column {self.key_cols}; keyed tables "
-                    f"must have non-null keys (merge joins on ==)"
-                )
+        added, m = self.write_observed(
+            prepared, [F.count(F.lit(1)).alias("rows")],
+            null_key=any_null_key(self.key_cols) if self.key_cols else None,
+        )
         return self.commit(
             added=added,
             overwrite_all=True,
             bookmarks=bookmarks,
-            summary={**(summary or {}), "operation": "overwrite"},
+            summary={**(summary or {}), "operation": "overwrite",
+                     "rows": m["rows"]},
         )
 
     def reset_state(
@@ -1124,15 +1137,12 @@ class LakeTable:
         orphan-GC discipline Iceberg's remove_orphan_files uses. Set to 0
         only when no other writer can be active."""
         d = os.path.join(self.path, MANIFEST_DIR)
-        names = sorted(
-            n for n in os.listdir(d) if n.startswith("v") and n.endswith(".json")
-        )
-        keep, drop = names[-keep_versions:], names[:-keep_versions]
+        versions = manifest_versions(self.path)
+        keep, drop = versions[-keep_versions:], versions[:-keep_versions]
         referenced: set[str] = set()
         kept_segs: set[str] = set()
-        for name in keep:
-            with open(os.path.join(d, name)) as fh:
-                root = json.load(fh)
+        for v in keep:
+            root = read_manifest(self.path, v)
             kept_segs.update(root.get("segments", {}).values())
             m = _assemble_manifest(self.path, root)
             for fl in m["buckets"].values():
@@ -1154,8 +1164,8 @@ class LakeTable:
                 now - os.path.getmtime(full) >= min_age_sec
             ):
                 shutil.rmtree(full, ignore_errors=True)
-        for name in drop:
-            os.unlink(os.path.join(d, name))
+        for v in drop:
+            os.unlink(manifest_path(self.path, v))
         # segment files not referenced by any kept root (superseded
         # bucket rewrites, or orphans from a lost commit race) — same
         # grace period as data files protects in-flight committers
@@ -1173,7 +1183,7 @@ class LakeTable:
             "removed_files": removed_files,
             "removed_manifests": len(drop),
             "removed_segments": removed_segments,
-            "kept_versions": [int(n[1:-5]) for n in keep],
+            "kept_versions": keep,
         }
 
     def compact(self, max_files_per_bucket: int = 1) -> dict | None:
@@ -1202,13 +1212,6 @@ class LakeTable:
         keys = [str(b) for b in todo]
         # the rewrite finishes inside this call, so its links are private
         link_dir = os.path.join(self.path, f"_tmp-spj-{uuid.uuid4().hex[:12]}")
-        # a bare scan→write (nothing to resolve) has no required
-        # distribution, so autoBucketedScan would silently fall back to a
-        # plain file scan (one partition per FILE, buckets interleaved
-        # across tasks); force the bucketed scan for the rewrite
-        key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-        old = self.spark.conf.get(key)
-        self.spark.conf.set(key, "false")
         try:
             files = self._files(self.manifest, keys)
             df = self._bucketed_relation(self.manifest, files, link_dir)
@@ -1217,9 +1220,9 @@ class LakeTable:
             df = _hide_tombstones(df, self.manifest).withColumn(
                 "_bucket", self.bucket_expr()
             )
-            added = self.write_bucket_files(df, clustered=True)
+            with _bucketed_scans_forced(self.spark):
+                added = self.write_bucket_files(df, clustered=True)
         finally:
-            self.spark.conf.set(key, old)
             shutil.rmtree(link_dir, ignore_errors=True)
         return self.commit(
             added=added,
@@ -1227,6 +1230,45 @@ class LakeTable:
             summary={"operation": "compact", "buckets": todo,
                      "clustered": True},
         )
+
+
+_FORCED_LOCK = threading.Lock()
+_forced: dict[int, tuple[int, str]] = {}  # id(session) → (holders, saved)
+
+
+@contextlib.contextmanager
+def _bucketed_scans_forced(spark: SparkSession):
+    """Plan bucketed scans as bucketed for the duration. A bare
+    scan→write (a compaction with nothing to resolve) has no required
+    distribution, so ``autoBucketedScan`` would silently fall back to a
+    plain file scan (one partition per FILE, buckets interleaved across
+    tasks) and the clustered write would scatter a bucket over files.
+
+    The setting is session-wide and compactions of different tables run
+    concurrently (``MultiStreamPipeline``'s fan-out), so it is held, not
+    toggled: the first holder saves the value and sets ``false``, the last
+    one restores it — interleaved save/set/restore pairs would otherwise
+    leave it at ``false``. While held, other queries of the session also
+    scan bucketed relations bucketed; the engine's other bucketed scans
+    (merge-on-read resolution, storage-partitioned merge reads) feed an
+    aggregate or a join, which keeps them bucketed anyway."""
+    key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+    sid = id(spark)
+    with _FORCED_LOCK:
+        holders, saved = _forced.get(sid, (0, ""))
+        if not holders:
+            saved = spark.conf.get(key)
+            spark.conf.set(key, "false")
+        _forced[sid] = (holders + 1, saved)
+    try:
+        yield
+    finally:
+        with _FORCED_LOCK:
+            holders, saved = _forced.pop(sid)
+            if holders > 1:
+                _forced[sid] = (holders - 1, saved)
+            else:
+                spark.conf.set(key, saved)
 
 
 def _hide_tombstones(df: DataFrame, manifest: dict) -> DataFrame:
@@ -1311,10 +1353,33 @@ def _assemble_manifest(path: str, root: dict) -> dict:
     return m
 
 
+def manifest_path(path: str, version: int) -> str:
+    return os.path.join(path, MANIFEST_DIR, f"v{version:012d}.json")
+
+
+def read_manifest(path: str, version: int) -> dict:
+    """Manifest ``version`` as stored: a segmented table's root carries
+    the segment index, not the file lists (see ``_assemble_manifest``)."""
+    with open(manifest_path(path, version)) as fh:
+        return json.load(fh)
+
+
+def manifest_versions(path: str) -> list[int]:
+    """The committed manifest versions of the table at ``path``, oldest
+    first; empty when there is none."""
+    d = os.path.join(path, MANIFEST_DIR)
+    if not os.path.isdir(d):
+        return []
+    return sorted(
+        int(n[1:-5]) for n in os.listdir(d)
+        if n.startswith("v") and n.endswith(".json")
+    )
+
+
 def _write_manifest(path: str, manifest: dict) -> None:
     d = os.path.join(path, MANIFEST_DIR)
     os.makedirs(d, exist_ok=True)
-    final = os.path.join(d, f"v{manifest['version']:012d}.json")
+    final = manifest_path(path, manifest["version"])
     tmp = os.path.join(d, f".tmp-{uuid.uuid4().hex}.json")
     with open(tmp, "w") as fh:
         json.dump(manifest, fh, indent=1, default=str)

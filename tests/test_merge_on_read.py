@@ -278,3 +278,74 @@ def test_read_of_missing_files_fails_without_leaving_a_link_dir(spark, tmp_path,
     with pytest.raises(FileNotFoundError):
         table.read()
     assert _link_dirs(table) == []
+
+
+def test_concurrent_compactions_keep_the_session_conf(spark, tmp_path, events):
+    """Compactions of different tables overlap in the multi-stream
+    fan-out. The bucketed-scan setting a compaction holds is
+    session-wide: after every round of 4 concurrent compactions it is back
+    to its value before, and each compacted bucket is one file."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+    before = spark.conf.get(key)
+    tables = [
+        LakeTable.create(spark, str(tmp_path / f"t{i}"), TRANSCRIPT_SCHEMA,
+                         TRANSCRIPT_KEY, num_buckets=4)
+        for i in range(4)
+    ]
+    start = threading.Barrier(len(tables))
+
+    def compact(t):
+        start.wait()
+        return t.compact()
+
+    for rnd, (lo, hi) in enumerate([(0, 60), (60, 120), (120, 10**9)]):
+        batch = events.where((F.col("lsn") > lo) & (F.col("lsn") <= hi))
+        for t in tables:
+            merge_into(t, batch, batch_id=rnd, mode="mor")
+        with ThreadPoolExecutor(len(tables)) as pool:
+            list(pool.map(compact, tables))
+        assert spark.conf.get(key) == before, rnd
+        for t in tables:
+            assert not any(t.manifest["deltas"].values())
+            assert all(len(fl) == 1 for fl in t.manifest["buckets"].values() if fl)
+    _assert_equal(tables[0], _expected(events))
+
+
+def test_bucketed_scan_hold_is_reference_counted():
+    """Overlapping holders of the compaction's bucketed-scan setting (more
+    threads than cores, a short switch interval): it reads ``false`` while
+    any holder is inside and is restored once the last one leaves."""
+    import sys
+    import threading
+    from types import SimpleNamespace
+
+    from pipelinewise_spark.lake.table import _bucketed_scans_forced
+
+    key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+    conf = {key: "true"}
+    session = SimpleNamespace(
+        conf=SimpleNamespace(get=conf.__getitem__, set=conf.__setitem__)
+    )
+    seen = []
+
+    def hold():
+        for _ in range(200):
+            with _bucketed_scans_forced(session):
+                seen.append(conf[key])
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=hold) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert len(seen) == 16 * 200 and set(seen) == {"false"}
+    assert conf[key] == "true"

@@ -203,6 +203,33 @@ def test_exactly_once_window_keyless_no_lsn_guard(spark, tmp_path, monkeypatch):
         merge_into(t, src, batch_id=3)
 
 
+@pytest.mark.parametrize("filter_applied_lsn", [False, True])
+def test_keyless_append_honours_filter_applied_lsn(spark, tmp_path,
+                                                   filter_applied_lsn):
+    """A keyless batch below the committed bookmark: with the LSN filter
+    off (a multi-partition Kafka topic, whose lagging partition carries
+    lower LSNs) it is appended; with it on it is a replay and dropped —
+    the same rule keyed merges follow."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    schema = StructType([StructField("msg", StringType())])
+    t = LakeTable.create(spark, str(tmp_path / "t"), schema, key_cols=[],
+                         num_buckets=4)
+
+    def batch(msg, lsn):
+        return spark.createDataFrame([(msg, lsn)], "msg string, lsn long") \
+            .withColumn("op", F.lit("I"))
+
+    merge_into(t, batch("ahead", 10), batch_id=0,
+               filter_applied_lsn=filter_applied_lsn)
+    m = merge_into(t, batch("lagging", 5), batch_id=1,
+                   filter_applied_lsn=filter_applied_lsn)
+    kept = ["ahead"] if filter_applied_lsn else ["ahead", "lagging"]
+    assert m["inserted"] == len(kept) - 1
+    assert sorted(r["msg"] for r in t.read().collect()) == kept
+    assert t.bookmarks["default"]["lsn"] == 10
+
+
 def test_merge_emptying_a_bucket_on_bucket_col_layout(spark, tmp_path):
     """Regression: on a non-aligned (bucket_col) layout the write adds a
     salted repartition AFTER the merge's CollectMetrics node; when the

@@ -49,6 +49,28 @@ def test_commit_metrics_and_lineage(spark, tmp_path):
     }
 
 
+def test_file_lineage_marks_live_delta_files(spark, tmp_path):
+    """Merge-on-read delta files the snapshot references are live; once
+    compaction folds them into the base they are not."""
+    events = generate_change_events(spark, n_convs=8, turns_per_conv=3, n_updates=30)
+    table = LakeTable.create(
+        spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA, TRANSCRIPT_KEY, num_buckets=4
+    )
+    merge_into(table, events.where(F.col("lsn") <= 40), batch_id=0, stream="s")
+    merge_into(table, events.where(F.col("lsn") > 40), batch_id=1, stream="s",
+               mode="mor")
+
+    def live():
+        return {r["path"] for r in file_lineage_df(spark, table).collect() if r["live"]}
+
+    base = {p for fl in table.manifest["buckets"].values() for p in fl}
+    deltas = {p for fl in table.manifest["deltas"].values() for p in fl}
+    assert deltas and live() == base | deltas
+    table.compact()
+    assert live() == {p for fl in table.manifest["buckets"].values() for p in fl}
+    assert not live() & deltas
+
+
 def test_compaction_bounds_file_chains(spark, tmp_path):
     events = generate_change_events(
         spark, n_convs=6, turns_per_conv=3, n_updates=40, delete_pct=0

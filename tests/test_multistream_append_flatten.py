@@ -63,6 +63,21 @@ def test_multistream_file_stream(spark, tmp_path):
     assert ta.read().count() > 0 and tb.read().count() > 0
 
 
+def test_stream_runners_reject_unknown_options(spark, tmp_path):
+    """Both pipeline classes share one stream runner with one explicit
+    signature: a misspelt option fails instead of being ignored."""
+    import pytest
+
+    table = LakeTable.create(spark, str(tmp_path / "a"), TRANSCRIPT_SCHEMA,
+                             TRANSCRIPT_KEY, num_buckets=4)
+    pipe = CdcPipeline(table, stream="a")
+    multi = MultiStreamPipeline({"a": pipe})
+    for run in (pipe.run_file_stream, pipe.run_singer_stream,
+                multi.run_file_stream, multi.run_singer_stream):
+        with pytest.raises(TypeError, match="timeout"):
+            run(str(tmp_path / "in"), str(tmp_path / "ck"), timeout=5)
+
+
 def test_append_only_no_pk(spark, tmp_path):
     schema = StructType(
         [StructField("payload", StringType()), StructField("src", StringType())]

@@ -6,7 +6,10 @@ murmur3 partitionIdExpression, so the declared layout is physically true).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
+from test_plan_invariants import _sql_plans
 
 from pipelinewise_spark.cdc.events import TRANSCRIPT_KEY, TRANSCRIPT_SCHEMA
 from pipelinewise_spark.cdc.gen import generate_change_events
@@ -16,6 +19,22 @@ from pipelinewise_spark.lake.table import LakeTable
 
 def _executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _merge_write_plan(spark, merge) -> tuple[str, int]:
+    """The executed plan of the merge's data write, as the SQL status
+    store recorded it, and the number of hash-partitioning exchanges in
+    its final (adaptive) plan."""
+    [plan] = [p for p in _sql_plans(spark, merge)
+              if "InsertIntoHadoopFsRelationCommand" in p]
+    final = plan.split("== Initial Plan ==")[0]
+    details = plan.split("\n\n")
+    n_hash = sum(
+        any(d.startswith(f"({i}) Exchange") and "Arguments: hashpartitioning" in d
+            for d in details)
+        for i in re.findall(r"Exchange \((\d+)\)", final)
+    )
+    return plan, n_hash
 
 
 def test_scan_clustered_join_has_single_exchange(spark, tmp_path, events=None):
@@ -96,19 +115,19 @@ def test_merge_into_spj_plan_single_exchange(spark, tmp_path):
         spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA, TRANSCRIPT_KEY, num_buckets=4
     )
     merge_into(table, ev.where(F.col("lsn") <= 120), batch_id=0)
-    m_spj = merge_into(
+    out = []
+    plan, n_hash = _merge_write_plan(spark, lambda: out.append(merge_into(
         table, ev.where((F.col("lsn") > 120) & (F.col("lsn") <= 150)),
-        batch_id=1, spj=True, capture_plan=True,
-    )
-    assert m_spj["spj"] is True
-    assert m_spj["plan"].count("Exchange hashpartitioning") == 1, m_spj["plan"]
-    assert "SelectedBucketsCount" in m_spj["plan"], m_spj["plan"]
-    m_plain = merge_into(
+        batch_id=1, spj=True,
+    )))
+    assert out[0]["spj"] is True
+    assert n_hash == 1, plan
+    assert "SelectedBucketsCount" in plan, plan
+    plan, n_hash = _merge_write_plan(spark, lambda: merge_into(
         table, ev.where(F.col("lsn") > 150), batch_id=2, spj=False,
-        capture_plan=True,
-    )
+    ))
     # the plain path pays the target-side exchange the SPJ path eliminates
-    assert m_plain["plan"].count("Exchange hashpartitioning") == 2, m_plain["plan"]
+    assert n_hash == 2, plan
 
 
 def test_merge_rejects_null_primary_key(spark, tmp_path):
