@@ -163,6 +163,7 @@ def bigtarget_merge_bench(spark, *, n_target: int = 3_000_000,
     scripts/spj_experiment.py, this records the wall-clock A/B."""
     from pyspark.sql import functions as F
 
+    from pipelinewise_spark.cdc import merge
     from pipelinewise_spark.cdc.events import TRANSCRIPT_KEY, TRANSCRIPT_SCHEMA
     from pipelinewise_spark.cdc.merge import merge_into
     from pipelinewise_spark.lake.table import LakeTable
@@ -192,23 +193,26 @@ def bigtarget_merge_bench(spark, *, n_target: int = 3_000_000,
     batch.count()
 
     out = {}
+    spj_default = merge.SPJ
     for label, flag in (("plain", False), ("spj", True)):
+        merge.SPJ = flag  # force the read path for this A/B row
         path = os.path.join(base, label)
         shutil.copytree(proto, path)
         t = LakeTable(spark, path)
-        merge_into(t, batch, batch_id="warm", stream="b", spj=flag)  # warm-up
+        merge_into(t, batch, batch_id="warm", stream="b")  # warm-up
         times = []
         for i in range(N_RUNS):
             t2_path = os.path.join(base, f"{label}-{i}")
             shutil.copytree(proto, t2_path)
             t2 = LakeTable(spark, t2_path)
             t0 = time.perf_counter()
-            m = merge_into(t2, batch, batch_id=0, stream="b", spj=flag)
+            m = merge_into(t2, batch, batch_id=0, stream="b")
             times.append(time.perf_counter() - t0)
             shutil.rmtree(t2_path, ignore_errors=True)
         out[label] = {"sec": round(_median(times), 3),
                       "times": [round(x, 3) for x in times],
                       "updated": m["updated"], "inserted": m["inserted"]}
+    merge.SPJ = spj_default
     batch.unpersist()
     shutil.rmtree(base, ignore_errors=True)
     assert out["plain"]["updated"] == out["spj"]["updated"]

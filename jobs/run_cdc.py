@@ -494,10 +494,9 @@ def main(argv: list[str] | None = None) -> int:
         with open(args.transform_config) as fh:
             transform = compile_transformations(json.load(fh), stream=args.stream)
 
-    # soft-delete is governed by the TABLE property (set at create above);
-    # passing the CLI flag through on a resumed table would raise when the
-    # flag is omitted (store_true can't express None). Surface a clear
-    # error if the flag contradicts an existing table instead.
+    # soft-delete is governed by the TABLE property (set at create above)
+    # and the merge follows it; surface a clear error if the flag
+    # contradicts an existing table instead of silently hard-deleting.
     prop_soft = bool(table.manifest["properties"].get("soft_delete", False))
     if args.soft_delete and not prop_soft:
         p.error(
@@ -507,7 +506,6 @@ def main(argv: list[str] | None = None) -> int:
     pipe = CdcPipeline(
         table,
         stream=args.stream,
-        soft_delete=None,
         transform=transform,
         compact_every=args.compact_every,
         validate=args.validate,
@@ -562,7 +560,7 @@ def main(argv: list[str] | None = None) -> int:
         metrics = pipe.history
     print(json.dumps({
         "mode": args.mode,
-        "batches": len(metrics),
+        "batches": pipe.n_applied,
         "bookmarks": table.bookmarks,
         "version": table.version,
         "metrics": metrics,

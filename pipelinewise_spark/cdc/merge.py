@@ -20,7 +20,7 @@ Reference semantics being reproduced (SURVEY §2.3):
 One apply sequence for every table kind (:func:`_merge_once`):
 
 1. replay guards — applied batch id → skip; evicted ids without the LSN
-   backstop → :class:`ExactlyOnceWindowError`; soft-delete contradiction;
+   backstop → :class:`ExactlyOnceWindowError`;
 2. bookmark prefix filter — events at or below the stream's committed LSN
    are dropped (one rule for keyed and keyless batches);
 3. one projection onto the table's fields (:func:`_project`);
@@ -65,6 +65,13 @@ from pipelinewise_spark.lake.table import (
 )
 
 DROP_ACTIONS = ("delete", "noop_delete")
+# Storage-partitioned-join read of the copy-on-write target (see
+# :func:`_merge_once`): "auto" takes it when the affected buckets hold
+# at least SPJ_MIN_TARGET_BYTES on disk; True / False force either read.
+SPJ: bool | str = "auto"
+SPJ_MIN_TARGET_BYTES = 256 << 20
+# Re-applies after a lost optimistic commit (:class:`CommitConflict`).
+COMMIT_RETRIES = 2
 
 
 class ExactlyOnceWindowError(RuntimeError):
@@ -78,40 +85,32 @@ def merge_into(
     table: LakeTable,
     source: DataFrame,
     *,
-    op_col: str = "op",
-    lsn_col: str = "lsn",
-    soft_delete: bool | None = None,
     batch_id: Any = None,
     pipeline_id: str = "default",
     stream: str = "default",
     filter_applied_lsn: bool = True,
     mode: str = "cow",
-    spj: bool | str = "auto",
-    spj_min_target_bytes: int = 256 << 20,
-    retries: int = 2,
 ) -> dict:
     """Apply one change batch (see :func:`_merge_once` for semantics and
-    the physical plan). Retries on :class:`CommitConflict` — the
-    optimistic-concurrency loss against another writer: refresh to the
-    winner's manifest and re-apply. Correct because the batch-id guard and
-    LSN bookmark filter re-evaluate against the refreshed state (a batch
-    the winner already committed no-ops), and the loser's orphaned data
-    files are reclaimed by ``vacuum``. This is the retry the reference
+    the physical plan). Retries up to ``COMMIT_RETRIES`` times on
+    :class:`CommitConflict` — the optimistic-concurrency loss against
+    another writer: refresh to the winner's manifest and re-apply.
+    Correct because the batch-id guard and LSN bookmark filter
+    re-evaluate against the refreshed state (a batch the winner already
+    committed no-ops), and the loser's orphaned data files are reclaimed
+    by ``vacuum``. This is the retry the reference
     gets for free from single-writer pipes and a warehouse MERGE
     transaction (``db_sync.py:359-431``)."""
-    while True:
+    for attempt in range(COMMIT_RETRIES + 1):
         try:
             return _merge_once(
-                table, source, op_col=op_col, lsn_col=lsn_col,
-                soft_delete=soft_delete, batch_id=batch_id,
-                pipeline_id=pipeline_id, stream=stream,
-                filter_applied_lsn=filter_applied_lsn, mode=mode,
-                spj=spj, spj_min_target_bytes=spj_min_target_bytes,
+                table, source, batch_id=batch_id, pipeline_id=pipeline_id,
+                stream=stream, filter_applied_lsn=filter_applied_lsn,
+                mode=mode,
             )
         except CommitConflict:
-            if retries <= 0:
+            if attempt == COMMIT_RETRIES:
                 raise
-            retries -= 1
             table.refresh()
 
 
@@ -119,16 +118,11 @@ def _merge_once(
     table: LakeTable,
     source: DataFrame,
     *,
-    op_col: str,
-    lsn_col: str,
-    soft_delete: bool | None,
     batch_id: Any,
     pipeline_id: str,
     stream: str,
     filter_applied_lsn: bool,
     mode: str,
-    spj: bool | str,
-    spj_min_target_bytes: int,
 ) -> dict:
     """Apply one change batch. Returns the metrics dict that was also
     persisted into the manifest summary. Idempotent per (pipeline_id,
@@ -156,10 +150,15 @@ def _merge_once(
       regime where CoW write amplification dominates). Reads resolve
       last-per-key across base+delta; ``LakeTable.compact`` folds deltas
       back (and physically removes hard-deleted rows, the reference's
-      post-load DELETE). Soft/hard delete is the table property
-      ``soft_delete`` in MoR (resolution-time decision).
+      post-load DELETE).
 
-    ``spj`` — storage-partitioned-join read of the target: when the
+    Soft or hard delete is the table property ``soft_delete``, set at
+    :meth:`LakeTable.create`: the read-time tombstone filter keys off the
+    same property, so the merge has no per-call override that could
+    contradict it. The change envelope's ``op`` and ``lsn`` columns carry
+    the operation and the ordering.
+
+    ``SPJ`` — storage-partitioned-join read of the target: when the
     buckets are key-aligned and carry no outstanding deltas, the target
     scan is registered as a bucketed table
     (:meth:`LakeTable.scan_clustered`) so the merge join shuffles ONLY the
@@ -167,16 +166,17 @@ def _merge_once(
     huge-table/small-batch regime (95% of shuffle bytes measured,
     scripts/spj_experiment.py), moves zero bytes.
 
-    ``"auto"`` (default) enables it only when the affected buckets hold ≥
-    ``spj_min_target_bytes`` on disk: when the target side is small the
-    shuffle it avoids is nearly free, while the bucketed scan costs AQE's
-    partition coalescing and skew-join splitting and pins the source
-    shuffle to ``num_buckets`` partitions (measured 25-60% slower at
-    10-MB-target bench scale, vs a 95% shuffle-byte cut at 4M-row-target
-    scale). ``True`` forces it, ``False`` forces the plain read."""
+    ``"auto"`` (the module default) enables it only when the affected
+    buckets hold ≥ ``SPJ_MIN_TARGET_BYTES`` on disk: when the target side
+    is small the shuffle it avoids is nearly free, while the bucketed
+    scan costs AQE's partition coalescing and skew-join splitting and
+    pins the source shuffle to ``num_buckets`` partitions (measured
+    25-60% slower at 10-MB-target bench scale, vs a 95% shuffle-byte cut
+    at 4M-row-target scale). ``True`` forces it, ``False`` forces the
+    plain read; tests and experiments patch the constant to force one."""
     if batch_id is not None and batch_id in table.applied_batch_ids(pipeline_id):
         return {"skipped": True, "batch_id": batch_id}
-    lsn_filter = filter_applied_lsn and lsn_col in source.columns
+    lsn_filter = filter_applied_lsn and "lsn" in source.columns
     evicted = table.batch_ids_evicted(pipeline_id)
     if batch_id is not None and not lsn_filter and evicted:
         # The batch-id set is a BOUNDED window (lake/table.py
@@ -188,31 +188,16 @@ def _merge_once(
         # a deliberate unguarded re-apply stays allowed.)
         raise ExactlyOnceWindowError(
             f"the LSN bookmark filter is off (filter_applied_lsn="
-            f"{filter_applied_lsn}, source has {lsn_col!r}: "
-            f"{lsn_col in source.columns}) and {evicted} batch id(s) of "
+            f"{filter_applied_lsn}, source has 'lsn': "
+            f"{'lsn' in source.columns}) and {evicted} batch id(s) of "
             f"pipeline {pipeline_id!r} have been evicted from the "
             f"replay-guard window; re-enable the filter (with a monotonic "
             f"lsn column) or replay from a snapshot"
         )
 
-    # Soft-delete is a TABLE-level mode, not a per-call choice: the
-    # read-time tombstone filter keys off the 'soft_delete' property, so a
-    # per-call value that contradicts it would write tombstones that
-    # silently vanish (or hard-deletes that resurrect). Single source of
-    # truth = the property; an explicit matching param stays allowed.
-    prop_soft = bool(table.manifest["properties"].get("soft_delete", False))
-    if soft_delete is None:
-        soft_delete = prop_soft
-    elif soft_delete != prop_soft:
-        raise ValueError(
-            f"soft_delete={soft_delete} contradicts the table property "
-            f"soft_delete={prop_soft}; set properties={{'soft_delete': "
-            f"{soft_delete}}} at LakeTable.create instead"
-        )
-
     prev = table.bookmarks.get(stream, {}).get("lsn")
     if lsn_filter and prev is not None:
-        source = source.where(F.col(lsn_col) > F.lit(int(prev)))
+        source = source.where(F.col("lsn") > F.lit(int(prev)))
 
     key_cols = table.key_cols
     cow = bool(key_cols) and mode != "mor"
@@ -238,9 +223,9 @@ def _merge_once(
                         summary={"operation": "merge", "empty_batch": True},
                     )
                 return {"rows": 0, "batch_id": batch_id}
-            use_spj = bool(spj) and table.buckets_aligned_with_keys
-            if spj == "auto" and use_spj:
-                use_spj = table.bucket_bytes(affected) >= spj_min_target_bytes
+            use_spj = bool(SPJ) and table.buckets_aligned_with_keys
+            if SPJ == "auto" and use_spj:
+                use_spj = table.bucket_bytes(affected) >= SPJ_MIN_TARGET_BYTES
             tgt = None
             if use_spj:
                 # storage-partitioned read: the bucketed scan declares
@@ -266,11 +251,11 @@ def _merge_once(
                 # requires anyway.
                 source = source.repartition(table.num_buckets, *key_cols)
         if key_cols:
-            source = latest_per_key(source, key_cols, lsn_col=lsn_col)
-        batch = _project(table, source, op_col=op_col, lsn_col=lsn_col)
+            source = latest_per_key(source, key_cols)
+        batch = _project(table, source)
         if cow:
             operation, files_arg, tags = "merge", "added", {}
-            frame, aggs = _cow_frame(table, batch, tgt, soft_delete=soft_delete)
+            frame, aggs = _cow_frame(table, batch, tgt)
             null_key = F.col("__null_key")
             keep = ~F.col("__action").isin(*DROP_ACTIONS)
         elif key_cols:
@@ -337,12 +322,11 @@ def _merge_once(
     return result
 
 
-def _project(table: LakeTable, src: DataFrame, *, op_col: str,
-             lsn_col: str) -> DataFrame:
+def _project(table: LakeTable, src: DataFrame) -> DataFrame:
     """The batch on the table's fields. Payload columns the batch doesn't
     carry (pre-evolution events) backfill as NULL — the reference's ADD
     COLUMN backfill (db_sync.py:539-549). Metadata columns derive from
-    the change envelope: ``_lsn`` from ``lsn_col`` (NULL when a keyless
+    the change envelope: ``_lsn`` from ``lsn`` (NULL when a keyless
     source has none), ``_sdc_extracted_at`` from ``time_extracted``,
     ``_sdc_batched_at`` is now, and on keyed tables ``_sdc_deleted_at``
     marks a ``D`` event, which also travels on as ``__op`` for the CoW
@@ -351,11 +335,11 @@ def _project(table: LakeTable, src: DataFrame, *, op_col: str,
     extracted = (F.col("time_extracted") if "time_extracted" in has
                  else F.lit(None).cast("timestamp"))
     derived = {
-        LSN_COL: F.col(lsn_col).cast("long") if lsn_col in has else None,
+        LSN_COL: F.col("lsn").cast("long") if "lsn" in has else None,
         SDC_EXTRACTED_AT: extracted,
         SDC_BATCHED_AT: F.current_timestamp(),
         SDC_DELETED_AT: F.when(
-            F.col(op_col) == "D", F.coalesce(extracted, F.current_timestamp())
+            F.col("op") == "D", F.coalesce(extracted, F.current_timestamp())
         ).cast("timestamp") if table.key_cols else None,
     }
     cols = []
@@ -363,16 +347,19 @@ def _project(table: LakeTable, src: DataFrame, *, op_col: str,
         c = derived.get(f.name, F.col(f.name) if f.name in has else None)
         cols.append((F.lit(None).cast(f.dataType) if c is None else c).alias(f.name))
     if table.key_cols:
-        cols.append(F.col(op_col).alias("__op"))
+        cols.append(F.col("op").alias("__op"))
     return src.select(*cols)
 
 
 def _cow_frame(
-    table: LakeTable, src: DataFrame, tgt: DataFrame, *, soft_delete: bool
+    table: LakeTable, src: DataFrame, tgt: DataFrame
 ) -> tuple[DataFrame, list]:
     """Full-outer join of the deduped batch with the affected buckets:
     every joined row with its merge ``__action``, plus the aggregates the
-    observed write collects (action counts, the batch's max LSN)."""
+    observed write collects (action counts, the batch's max LSN). A ``D``
+    keeps a tombstone under the table's ``soft_delete`` property and
+    drops the row otherwise."""
+    soft_delete = bool(table.manifest["properties"].get("soft_delete", False))
     s = src.withColumn("__s_exists", F.lit(True)).alias("s")
     t = tgt.withColumn("__t_exists", F.lit(True)).alias("t")
     # Plain EqualTo join keys, NOT eqNullSafe: Catalyst rewrites

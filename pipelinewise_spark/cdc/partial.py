@@ -53,9 +53,7 @@ def partial_sync(
     stream: str = "default",
     lsn: int | None = None,
     batch_id: Any = None,
-    soft_delete: bool | None = None,
     hard_delete: bool = True,
-    **merge_kw,
 ) -> dict:
     """Reconcile ``table`` against ``export`` (the source's current rows
     with ``column BETWEEN start AND end``) and return the merge metrics.
@@ -73,7 +71,9 @@ def partial_sync(
     ``_lsn`` values, where every upsert/delete would silently classify
     as stale). ``hard_delete=False`` skips the vanish-delete
     (merge-only, the reference's ``--hard-delete off`` target
-    shape)."""
+    shape). The merge commits under pipeline id ``partial-<stream>``;
+    soft or hard delete of the vanished keys follows the table's
+    ``soft_delete`` property."""
     if column not in export.columns:
         raise ValueError(f"export is missing the range column {column!r}")
     if not table.key_cols:
@@ -166,13 +166,8 @@ def partial_sync(
 
     try:
         return merge_into(
-            table,
-            batch,
-            stream=stream,
-            batch_id=batch_id,
-            soft_delete=soft_delete,
-            pipeline_id=merge_kw.pop("pipeline_id", f"partial-{stream}"),
-            **merge_kw,
+            table, batch, stream=stream, batch_id=batch_id,
+            pipeline_id=f"partial-{stream}",
         )
     finally:
         export.unpersist()

@@ -28,7 +28,12 @@ from pyspark.sql.types import StructType
 
 from pipelinewise_spark.cdc.events import CHANGE_EVENT_SCHEMA
 from pipelinewise_spark.cdc.merge import merge_into
-from pipelinewise_spark.lake.table import LakeTable
+from pipelinewise_spark.lake.table import (
+    COMPACT_DELTA_CHAIN,
+    COMPACT_MAX_FILES_PER_BUCKET,
+    MAX_APPLIED_BATCH_IDS,
+    LakeTable,
+)
 
 
 class _StreamRunner:
@@ -108,15 +113,8 @@ class CdcPipeline(_StreamRunner):
         *,
         stream: str = "default",
         pipeline_id: str = "default",
-        soft_delete: bool | None = None,
-        op_col: str = "op",
-        lsn_col: str = "lsn",
         transform: Callable[[DataFrame], DataFrame] | None = None,
-        auto_evolve: bool = False,
         compact_every: int | None = None,
-        max_files_per_bucket: int = 4,
-        compact_delta_chain: int | None = 8,
-        compact_delta_bytes: int | None = None,
         mode: str = "cow",
         validate: str = "permissive",
         quarantine_path: str | None = None,
@@ -137,23 +135,11 @@ class CdcPipeline(_StreamRunner):
         self.table = table
         self.stream = stream
         self.pipeline_id = pipeline_id
-        self.soft_delete = soft_delete
-        self.op_col = op_col
-        self.lsn_col = lsn_col
         self.transform = transform
-        self.auto_evolve = auto_evolve
+        #: compact every N applied batches; in merge-on-read mode the
+        #: delta-chain backstop (``COMPACT_DELTA_CHAIN``) also compacts
+        #: between those batches
         self.compact_every = compact_every
-        self.max_files_per_bucket = max_files_per_bucket
-        #: merge-on-read pressure backstop (NOT a cadence): compaction is
-        #: forced when any bucket's outstanding delta chain exceeds
-        #: ``compact_delta_chain`` files (read amplification bound, on by
-        #: default) or total outstanding delta bytes exceed
-        #: ``compact_delta_bytes`` (opt-in). A flood of tiny commits
-        #: otherwise grows chains/manifest without limit AND keeps
-        #: stats_filter file skipping disabled (LakeTable.read refuses
-        #: skipping over unresolved deltas).
-        self.compact_delta_chain = compact_delta_chain
-        self.compact_delta_bytes = compact_delta_bytes
         self.mode = mode
         #: T12 — record-validation mode for singer ingest ("permissive" |
         #: "strict" | "quarantine"); strict FAILFASTs on malformed RECORD
@@ -170,8 +156,8 @@ class CdcPipeline(_StreamRunner):
         self.quarantine_path = quarantine_path or (
             table.path.rstrip("/") + "_quarantine"
         )
-        #: widening type changes (int→long, float→double) under
-        #: auto-evolve: "version" (reference parity) or "promote"
+        #: widening type changes (int→long, float→double) under a
+        #: SCHEMA message: "version" (reference parity) or "promote"
         #: (in-place native promotion, evolution/drift.py).
         self.widen = widen
         #: ((SCHEMA message, widen, table fields after the reconcile),
@@ -192,70 +178,47 @@ class CdcPipeline(_StreamRunner):
         #: checkpoint + batch-id guard (per-partition offsets — exactly
         #: the reference tap_kafka's own bookmark model, sync.py:80-93).
         self.filter_applied_lsn = filter_applied_lsn
+        #: the last MAX_APPLIED_BATCH_IDS merge metrics and control
+        #: records (auto_compact, activate_version) — bounded, so a
+        #: long-running tail keeps O(1) driver memory
         self.history: list[dict] = []
+        #: applied batches so far: the ``compact_every`` cadence counts
+        #: these, not the (bounded, control-interleaved) history
+        self.n_applied = 0
+
+    def _record(self, entry: dict) -> None:
+        self.history.append(entry)
+        if len(self.history) > MAX_APPLIED_BATCH_IDS:
+            del self.history[0]
 
     # ------------------------------------------------------------- batching
 
     def apply_batch(self, df: DataFrame, batch_id: Any = None) -> dict:
         """One micro-batch: optional inline transform (the reference's
-        transform-field stage) → optional schema-drift reconcile → LSN
-        dedup → MERGE → atomic bookmark → optional compaction."""
+        transform-field stage) → LSN dedup → MERGE → atomic bookmark →
+        optional compaction."""
         if self.transform is not None:
             df = self.transform(df)
-        if self.auto_evolve:
-            from pyspark.sql.types import StructType
-
-            from pipelinewise_spark.evolution.drift import reconcile
-
-            payload = StructType(
-                [
-                    f
-                    for f in df.schema.fields
-                    if f.name
-                    not in ("op", "lsn", "stream", "time_extracted",
-                            self.op_col, self.lsn_col)
-                ]
-            )
-            reconcile(self.table, payload, widen=self.widen)
         metrics = merge_into(
             self.table,
             df,
-            op_col=self.op_col,
-            lsn_col=self.lsn_col,
-            soft_delete=self.soft_delete,
             batch_id=batch_id,
             pipeline_id=self.pipeline_id,
             stream=self.stream,
             mode=self.mode,
             filter_applied_lsn=self.filter_applied_lsn,
         )
-        self.history.append(metrics)
-        # cadence counts APPLIED BATCHES only — history also carries
-        # control records (auto_compact, activate_version) which must
-        # not shift or swallow the compact_every schedule
-        n_batches = sum(1 for h in self.history if "control" not in h)
-        if (
-            self.compact_every
-            and n_batches % self.compact_every == 0
-        ):
-            self.table.compact(max_files_per_bucket=self.max_files_per_bucket)
-        elif self.mode == "mor" and (
-            self.compact_delta_chain or self.compact_delta_bytes
-        ):
+        self._record(metrics)
+        self.n_applied += 1
+        if self.compact_every and self.n_applied % self.compact_every == 0:
+            self.table.compact(max_files_per_bucket=COMPACT_MAX_FILES_PER_BUCKET)
+        elif self.mode == "mor":
             p = self.table.delta_pressure()
-            if (
-                self.compact_delta_chain
-                and p["max_chain"] > self.compact_delta_chain
-            ) or (
-                self.compact_delta_bytes
-                and p["bytes"] > self.compact_delta_bytes
-            ):
+            if p["max_chain"] > COMPACT_DELTA_CHAIN:
                 self.table.compact(
-                    max_files_per_bucket=self.max_files_per_bucket
+                    max_files_per_bucket=COMPACT_MAX_FILES_PER_BUCKET
                 )
-                self.history.append(
-                    {"control": "auto_compact", "pressure": p}
-                )
+                self._record({"control": "auto_compact", "pressure": p})
         return metrics
 
     # ----------------------------------------------------- singer ingestion
@@ -317,9 +280,7 @@ class CdcPipeline(_StreamRunner):
             if m.get("stream") == self.stream
         ]
         if versions:
-            self.history.append(
-                {"control": "activate_version", "versions": versions}
-            )
+            self._record({"control": "activate_version", "versions": versions})
         decoded = protocol.decode_records(
             lines, payload, stream=self.stream, validate=self.validate,
             claim_unparseable=_claim_unparseable,
@@ -364,9 +325,20 @@ class CdcPipeline(_StreamRunner):
         evict the replay window — the DLQ would brick the pipeline it
         exists to protect. A numeric batch id doubles as the bookmark
         backstop (a post-eviction replay of batch N folds under
-        ``lsn > N`` exactly like a change event would)."""
+        ``lsn > N`` exactly like a change event would).
+
+        A direct call without a batch id gets a content-derived one, so a
+        retry over the same rejected lines folds to a no-op. The digest
+        is the row count plus the sums of two independently seeded
+        64-bit hashes of the lines: one distributed reduce, blind to line
+        order, with negligible collisions (xor would let two identical
+        lines cancel). The fold holds only while that id is inside the
+        quarantine pipeline's applied-batch-id window: after
+        ``MAX_APPLIED_BATCH_IDS`` later quarantining batches evict it, a
+        retry of the same lines appends them again."""
         if bad.limit(1).count() == 0:
             return 0
+        import hashlib
         import time as _time
 
         from pyspark.sql import functions as F
@@ -377,29 +349,21 @@ class CdcPipeline(_StreamRunner):
         except (TypeError, ValueError):
             q_lsn = int(_time.time() * 1_000_000)
             if batch_id is None:
-                # ADVICE r7: a direct ingest_singer_lines call (no
-                # streaming batch id) re-run over the same lines minted
-                # a fresh wall-clock lsn with no batch-id guard, so the
-                # dead-letter table accumulated duplicates on retry.
                 # The lsn MUST stay monotonic (it is the quarantine
                 # table's bookmark — a content-hash lsn lower than the
                 # bookmark would silently drop NEW dead letters), so
-                # dedup by a content-derived synthetic BATCH ID instead:
-                # same rejected lines → same id → the applied-batch-id
-                # guard folds the replay to a no-op. Two legitimately
-                # identical garbage batches also fold — that is the
-                # dedup semantics the DLQ wants.
+                # dedup by a content-derived synthetic BATCH ID instead.
+                # Two legitimately identical garbage batches also fold —
+                # that is the dedup semantics the DLQ wants. The hash
+                # sums are decimal: a long sum overflows under ANSI.
                 digest = bad.select(
-                    # order-insensitive AND collision-resistant: md5
-                    # over the SORTED per-line md5s (an additive sum of
-                    # truncated hashes would let two different batches
-                    # collide on one id and silently drop the second
-                    # batch's dead letters)
-                    F.md5(F.concat_ws(",", F.sort_array(
-                        F.collect_list(F.md5("value"))
-                    ))).alias("h")
-                ).first()["h"]
-                batch_id = f"q-content-{digest}"
+                    F.count(F.lit(1)),
+                    *[F.sum(F.xxhash64(F.lit(seed), "value")
+                            .cast("decimal(38,0)")) for seed in (1, 2)],
+                ).first()
+                batch_id = "q-content-" + hashlib.md5(
+                    repr(tuple(digest)).encode()
+                ).hexdigest()
         bad = bad.withColumn("lsn", F.lit(q_lsn).cast("long"))
         q_schema = StructType([
             StructField("stream", StringType()),
@@ -426,7 +390,7 @@ class CdcPipeline(_StreamRunner):
 
         if lsn_bounds is None:
             row = events.agg(
-                F.min(self.lsn_col).alias("lo"), F.max(self.lsn_col).alias("hi")
+                F.min("lsn").alias("lo"), F.max("lsn").alias("hi")
             ).collect()[0]
             if row["hi"] is None:
                 return [self.apply_batch(events, batch_id="replay-empty")]
@@ -441,7 +405,7 @@ class CdcPipeline(_StreamRunner):
         out = []
         for i, (lo, hi) in enumerate(lsn_bounds):
             batch = events.where(
-                (F.col(self.lsn_col) > lo) & (F.col(self.lsn_col) <= hi)
+                (F.col("lsn") > lo) & (F.col("lsn") <= hi)
             )
             out.append(self.apply_batch(batch, batch_id=f"replay-{lo}-{hi}"))
         return out

@@ -346,9 +346,9 @@ def build_project(
                     lt.manifest["properties"].get("soft_delete", False)
                 )
                 if bool(soft_delete) != prop_soft:
-                    # fail at WIRING time with a clear message — deferred,
-                    # this surfaces as an opaque foreachBatch failure
-                    # after the stream starts (merge.py's property check)
+                    # fail at WIRING time with a clear message: the merge
+                    # follows the table property, so the requested mode
+                    # would otherwise be silently ignored
                     raise ValueError(
                         f"{stream}: soft_delete={soft_delete} contradicts "
                         f"existing table {path} (property={prop_soft})"
@@ -383,7 +383,6 @@ def build_project(
             )
             pipelines[stream] = CdcPipeline(
                 lt, stream=stream, transform=transform,
-                soft_delete=soft_delete or None,
                 widen=widen,
                 validate=validate,
                 # multi-partition Kafka micro-batches follow per-

@@ -309,6 +309,31 @@ def lsh_similar_pairs(
     )
 
 
+def _band_pairs(ids: DataFrame, buckets: list) -> DataFrame:
+    """Distinct ``(id_a, id_b)`` pairs, ``id_a < id_b``, of ``ids`` rows
+    that share a bucket in any band; ``buckets[b]`` is band ``b``'s
+    bucket column. Each row explodes to one ``(band, bkt)`` row per band
+    and the band rows self-join on both."""
+    exploded = ids.select(
+        "id",
+        F.explode(F.array(*[
+            F.struct(F.lit(b).alias("band"), bkt.alias("bkt"))
+            for b, bkt in enumerate(buckets)
+        ])).alias("bb"),
+    ).select("id", "bb.band", "bb.bkt")
+    a, c = exploded.alias("a"), exploded.alias("b")
+    return (
+        a.join(
+            c,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bkt") == F.col("b.bkt"))
+            & (F.col("a.id") < F.col("b.id")),
+        )
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .distinct()
+    )
+
+
 def lsh_banded_candidates(
     df: DataFrame,
     *,
@@ -334,32 +359,13 @@ def lsh_banded_candidates(
     id pairs only (vectors join back in the verify stage), so the
     band-bucket shuffle carries no embedding payload.
     Columns: id_a, id_b (distinct)."""
-    buckets = [
-        F.struct(
-            F.lit(b).alias("band"),
-            hyperplane_bucket(
-                F.col("v"), dim, band_planes, seed=seed + b
-            ).alias("bkt"),
-        )
+    ids = _spread(df, id_col).select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("v")
+    )
+    return _band_pairs(ids, [
+        hyperplane_bucket(F.col("v"), dim, band_planes, seed=seed + b)
         for b in range(bands)
-    ]
-    exploded = (
-        _spread(df, id_col)
-        .select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .select("id", F.explode(F.array(*buckets)).alias("bb"))
-        .select("id", "bb.band", "bb.bkt")
-    )
-    a, c = exploded.alias("a"), exploded.alias("b")
-    return (
-        a.join(
-            c,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkt") == F.col("b.bkt"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    ])
 
 
 def lsh_banded_pairs(
@@ -400,24 +406,7 @@ def lsh_banded_pairs(
         ],
         norm(F.col(vec_col), dim).alias("nrm"),
     ).localCheckpoint(eager=True)
-    exploded = base.select(
-        "id",
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"), F.col(f"__bkt{b}").alias("bkt"))
-            for b in range(bands)
-        ])).alias("bb"),
-    ).select("id", "bb.band", "bb.bkt")
-    a, c = exploded.alias("a"), exploded.alias("b")
-    cands = (
-        a.join(
-            c,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkt") == F.col("b.bkt"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    cands = _band_pairs(base, [F.col(f"__bkt{b}") for b in range(bands)])
     va = base.select(F.col("id").alias("id_a"), F.col("v").alias("va"),
                      F.col("nrm").alias("na"))
     vb = base.select(F.col("id").alias("id_b"), F.col("v").alias("vb"),

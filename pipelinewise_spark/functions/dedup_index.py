@@ -330,8 +330,6 @@ def gate_transform(
     min_est: float = 0.8,
     id_col: str | None = None,
     text_col: str | None = None,
-    op_col: str = "op",
-    lsn_col: str = "lsn",
     in_batch: bool = True,
 ):
     """:func:`dedup_gate` as a ``CdcPipeline(transform=...)`` stage —
@@ -360,11 +358,11 @@ def gate_transform(
                 f"bootstrap one first (save_minhash_index over an empty "
                 f"or seed corpus admits everything)"
             ) from None
-        is_d = F.col(op_col).eqNullSafe(F.lit("D"))
+        is_d = F.col("op").eqNullSafe(F.lit("D"))
         deletes = df.where(is_d)
         ups = df.where(~is_d)
         pid = id_col or doc["id_col"]
-        if lsn_col in ups.columns:
+        if "lsn" in ups.columns:
             # ADVICE r7: the gate runs BEFORE the merge's latest-per-key
             # dedup, so a micro-batch carrying two versions of one id
             # (an older near-dup text, then a novel rewrite) let the
@@ -377,7 +375,7 @@ def gate_transform(
             # a key whose current text is a duplicate.
             from pipelinewise_spark.cdc.dedup import latest_per_key
 
-            latest = latest_per_key(ups, [pid], lsn_col=lsn_col)
+            latest = latest_per_key(ups, [pid])
             admitted = dedup_gate(
                 df.sparkSession, path, latest,
                 min_est=min_est, id_col=id_col, text_col=text_col,

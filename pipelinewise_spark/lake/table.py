@@ -87,6 +87,14 @@ FORMAT_VERSION = 1
 # (cdc/merge.py filter_applied_lsn) — the id set only needs to cover the
 # reorder window of the streaming engine, which is far below 1024.
 MAX_APPLIED_BATCH_IDS = 1024
+# Merge-on-read pressure backstop (not a cadence): a pipeline compacts
+# once any bucket's outstanding delta chain is longer than this. It
+# bounds read amplification, manifest growth and the time stats_filter
+# skipping stays disabled (``read`` refuses it over unresolved deltas).
+COMPACT_DELTA_CHAIN = 8
+# The pipelines' compaction threshold: a bucket is rewritten when it
+# holds more than this many files (``compact(max_files_per_bucket=)``).
+COMPACT_MAX_FILES_PER_BUCKET = 4
 # Past this many referenced files the manifest auto-splits into
 # per-bucket segment files behind a small root (see _publish_manifest):
 # a flat manifest's commit cost is O(total files) JSON serialization —
@@ -293,7 +301,7 @@ class LakeTable:
         count/bytes, deepest per-bucket chain, and bucket count. Driver-
         side O(outstanding files) stat — bounded in practice by the
         compaction trigger that consumes it (a healthy table holds at
-        most ``compact_delta_chain`` deltas per touched bucket). Deltas
+        most ``COMPACT_DELTA_CHAIN`` deltas per touched bucket). Deltas
         are what read amplification, manifest growth, AND the
         stats_filter refusal (``read``) all scale with, so this is the
         one number a flood must keep bounded."""

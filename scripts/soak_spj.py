@@ -1,6 +1,6 @@
 """Steady-state SPJ soak (VERDICT r2 item 3): N consecutive micro-batches
-merged into a ≥1 GB target with ``spj="auto"``, compaction and vacuum
-interleaved — per-batch wall stability is the evidence that the merge
+merged into a ≥1 GB target under the merge's ``SPJ="auto"`` read rule,
+compaction and vacuum interleaved — per-batch wall stability is the evidence that the merge
 path has no degradation mode (file-count growth, manifest bloat, stats
 accumulation) over a long-running stream.
 
@@ -86,8 +86,7 @@ def main():
         # delta-folding compaction against the same table
         mode = "mor" if b % 6 in (4, 5) else "cow"
         t0 = time.time()
-        m = merge_into(table, batch, batch_id=b, stream="soak", spj="auto",
-                       mode=mode)
+        m = merge_into(table, batch, batch_id=b, stream="soak", mode=mode)
         w = time.time() - t0
         walls.append(w)
         spj_used += bool(m.get("spj"))

@@ -90,6 +90,7 @@ def merge_into_experiment(spark, n_target, n_source, buckets):
     import shutil as _sh
     import tempfile
 
+    from pipelinewise_spark.cdc import merge
     from pipelinewise_spark.cdc.merge import merge_into
     from pipelinewise_spark.lake.table import LakeTable
     from pyspark.sql.types import (
@@ -113,21 +114,25 @@ def merge_into_experiment(spark, n_target, n_source, buckets):
         )
 
     out = {}
+    spj_default = merge.SPJ
     for label, spj in (("merge_into_plain", False), ("merge_into_spj", True)):
         d = tempfile.mkdtemp(prefix="spj-merge-")
         t = LakeTable.create(spark, d + "/t", schema,
                              ["conv_id", "turn_idx"], num_buckets=buckets)
         t0 = time.time()
-        merge_into(t, gen(n_target, 0), batch_id=0, spj=False)
+        merge.SPJ = False
+        merge_into(t, gen(n_target, 0), batch_id=0)
         load_wall = time.time() - t0
         src = gen(n_source, n_target)
+        merge.SPJ = spj  # force the read path under measurement
         rec = measure(
             spark, label,
-            lambda: merge_into(t, src, batch_id=1, spj=spj)["spj"],
+            lambda: merge_into(t, src, batch_id=1)["spj"],
         )
         rec["initial_load_wall_sec"] = round(load_wall, 2)
         out[label] = rec
         _sh.rmtree(d, ignore_errors=True)
+    merge.SPJ = spj_default
     return {
         "metric": "spj_merge_into",
         "n_target": n_target,

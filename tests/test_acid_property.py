@@ -85,10 +85,8 @@ def test_random_sequences_match_oracle(spark, tmp_path_factory, events, soft, sp
         properties={"soft_delete": soft},
     )
     cut = min(split, len(rows))
-    merge_into(table, df.where(F.col("lsn") <= cut), batch_id=0,
-               soft_delete=soft, stream="s")
-    merge_into(table, df.where(F.col("lsn") > cut), batch_id=1,
-               soft_delete=soft, stream="s")
+    merge_into(table, df.where(F.col("lsn") <= cut), batch_id=0, stream="s")
+    merge_into(table, df.where(F.col("lsn") > cut), batch_id=1, stream="s")
 
     expected = fold_events(rows, TRANSCRIPT_KEY, soft_delete=soft)
     actual = {

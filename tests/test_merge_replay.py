@@ -116,7 +116,7 @@ def test_soft_delete_tombstones(spark, tmp_path, events):
         spark, str(tmp_path / "t5"), TRANSCRIPT_SCHEMA, TRANSCRIPT_KEY,
         num_buckets=8, properties={"soft_delete": True},
     )
-    merge_into(table, events, batch_id=0, soft_delete=True)
+    merge_into(table, events, batch_id=0)
     exp = _expected(events, soft_delete=True)
     _assert_state_equal(table, exp, soft_delete=True)
     tomb = table.read().where(F.col("_sdc_deleted_at").isNotNull()).count()
@@ -275,3 +275,20 @@ def test_merge_emptying_a_bucket_on_bucket_col_layout(spark, tmp_path):
     assert t.read().where("id = 1").count() == 0
     assert t.read().count() == 12
     assert t.bookmarks["s"]["lsn"] == m["max_lsn"]
+
+
+def test_removed_apply_options_raise_type_error():
+    """The table owns soft or hard delete, the envelope owns ``op`` and
+    ``lsn``, and the SPJ read rule is a module constant: the apply path
+    takes none of them as an option, so a stale caller fails loudly at
+    the call instead of being silently ignored."""
+    from pipelinewise_spark.cdc.partial import partial_sync
+    from pipelinewise_spark.cdc.pipeline import CdcPipeline
+
+    # the signature rejects the keyword before any argument is used
+    with pytest.raises(TypeError):
+        partial_sync(None, None, column="c", start=0, end=1, spj=True)
+    with pytest.raises(TypeError):
+        CdcPipeline(None, auto_evolve=True)
+    with pytest.raises(TypeError):
+        merge_into(None, None, soft_delete=True)

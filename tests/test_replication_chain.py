@@ -72,7 +72,7 @@ def test_feed_driven_replica_converges(spark, tmp_path):
         spark, str(tmp_path / "b"), TRANSCRIPT_SCHEMA, TRANSCRIPT_KEY,
         num_buckets=4,
     )
-    pipe_a = CdcPipeline(a, stream="src", soft_delete=True)
+    pipe_a = CdcPipeline(a, stream="src")
     pipe_b = CdcPipeline(b, stream="replica")
     ckpt = str(tmp_path / "ckpt")
 

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pipelinewise_spark.cdc.events import TRANSCRIPT_KEY, TRANSCRIPT_SCHEMA
+from pipelinewise_spark.cdc import merge
 from pipelinewise_spark.cdc.gen import generate_change_events
 from pipelinewise_spark.cdc.merge import merge_into
 from pipelinewise_spark.functions import canonical
@@ -60,7 +61,7 @@ def test_compact_with_deltas_is_clustered(spark, tmp_path):
     assert after == expected
 
 
-def test_merge_retries_on_commit_conflict(spark, tmp_path):
+def test_merge_retries_on_commit_conflict(spark, tmp_path, monkeypatch):
     """Two writers, one table: the loser of the manifest CAS refreshes and
     re-applies (reference analog: warehouse MERGE transaction retry)."""
     ev = generate_change_events(spark, n_convs=15, turns_per_conv=3, n_updates=40)
@@ -69,9 +70,9 @@ def test_merge_retries_on_commit_conflict(spark, tmp_path):
     h2 = LakeTable(spark, path)  # second handle, will go stale
     merge_into(h1, ev.where(F.col("lsn") <= 45), batch_id="a", stream="s")
     assert h2.version == 0  # stale
-    with pytest.raises(CommitConflict):
-        merge_into(h2, ev.where(F.col("lsn") > 45), batch_id="b", stream="s",
-                   retries=0)
+    with monkeypatch.context() as mp, pytest.raises(CommitConflict):
+        mp.setattr(merge, "COMMIT_RETRIES", 0)
+        merge_into(h2, ev.where(F.col("lsn") > 45), batch_id="b", stream="s")
     h2.refresh()  # the failed attempt left no manifest change
     m = merge_into(h2, ev.where(F.col("lsn") > 45), batch_id="b", stream="s")
     assert not m.get("skipped")

@@ -13,7 +13,11 @@ from pyspark.sql import functions as F
 from pipelinewise_spark.cdc.events import TRANSCRIPT_KEY, TRANSCRIPT_SCHEMA
 from pipelinewise_spark.cdc.gen import generate_change_events
 from pipelinewise_spark.cdc.pipeline import CdcPipeline
-from pipelinewise_spark.lake.table import MANIFEST_DIR, LakeTable
+from pipelinewise_spark.lake.table import (
+    COMPACT_DELTA_CHAIN,
+    MANIFEST_DIR,
+    LakeTable,
+)
 
 
 def _manifest_size(t: LakeTable) -> int:
@@ -32,10 +36,7 @@ def test_mor_flood_delta_pressure_backstop(spark, tmp_path):
         spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA, TRANSCRIPT_KEY,
         num_buckets=4,
     )
-    pipe = CdcPipeline(
-        t, stream="s", mode="mor",
-        compact_every=None, compact_delta_chain=5,
-    )
+    pipe = CdcPipeline(t, stream="s", mode="mor", compact_every=None)
     ev = generate_change_events(
         spark, n_convs=12, turns_per_conv=3, n_updates=64
     ).persist()
@@ -57,8 +58,8 @@ def test_mor_flood_delta_pressure_backstop(spark, tmp_path):
     assert compactions, "delta-pressure trigger never fired"
     # pressure stayed bounded the whole run: a chain can exceed the
     # threshold by at most one commit before the backstop folds it
-    assert max_chain_seen <= 5 + 1
-    assert t.delta_pressure()["max_chain"] <= 5 + 1
+    assert max_chain_seen <= COMPACT_DELTA_CHAIN + 1
+    assert t.delta_pressure()["max_chain"] <= COMPACT_DELTA_CHAIN + 1
     # manifest stays O(bounded-outstanding-files), not O(commits):
     # the peak is not at the end of a 40-commit flood
     assert manifest_sizes[-1] <= max(manifest_sizes)
@@ -186,22 +187,6 @@ def test_widen_default_still_versions_and_guards_hold(spark, tmp_path):
             t, StructType([StructField("turn_idx", LongType())]),
             widen="promote",
         )
-
-
-def test_mor_byte_pressure_trigger(spark, tmp_path):
-    """The bytes knob alone (chain knob off) also forces compaction."""
-    t = LakeTable.create(
-        spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA, TRANSCRIPT_KEY,
-        num_buckets=2,
-    )
-    pipe = CdcPipeline(
-        t, stream="s", mode="mor",
-        compact_delta_chain=None, compact_delta_bytes=1,  # any delta trips
-    )
-    ev = generate_change_events(spark, n_convs=6, turns_per_conv=2, n_updates=4)
-    pipe.apply_batch(ev, batch_id=0)
-    assert [h for h in pipe.history if h.get("control") == "auto_compact"]
-    assert t.refresh().delta_pressure()["files"] == 0
 
 
 def test_connected_components_chain_and_convergence(spark):

@@ -167,8 +167,7 @@ def test_ivf_feed_maintenance_cli(spark, tmp_path):
             "vec_id", "embedding",
         )
 
-    merge_into(t, as_events(_emb(spark, n=40, seed=3), 0), batch_id=0,
-               soft_delete=True)
+    merge_into(t, as_events(_emb(spark, n=40, seed=3), 0), batch_id=0)
     idx = str(tmp_path / "ivf")
     cells, centroids = ann_index.fit_ivf_index(
         t.read().select("vec_id", "embedding"), k=4, iters=2
@@ -177,11 +176,11 @@ def test_ivf_feed_maintenance_cli(spark, tmp_path):
     v_fitted = t.refresh().version
 
     merge_into(t, as_events(_emb(spark, n=10, seed=5, id0=100), 500),
-               batch_id=1, soft_delete=True)
+               batch_id=1)
     # delete lsns must EXCEED batch 1's max (609) or the table's
     # exactly-once replay filter drops them as already-applied
     merge_into(t, as_events(_emb(spark, n=2, seed=3, id0=3), 5000, op="D"),
-               batch_id=2, soft_delete=True)
+               batch_id=2)
     assert run_feed.main([
         "--source", t.path, "--checkpoint", str(tmp_path / "ck"),
         "--mode", "index", "--target", idx,
@@ -229,8 +228,7 @@ def test_feed_watermark_filters_cow_reemits(spark, tmp_path):
             "vec_id", "embedding",
         )
 
-    merge_into(t, as_events(_emb(spark, n=40, seed=11), 0), batch_id=0,
-               soft_delete=True)
+    merge_into(t, as_events(_emb(spark, n=40, seed=11), 0), batch_id=0)
     idx = str(tmp_path / "pq")
     codes, cbs = ann_index.fit_pq_index(
         t.read().select("vec_id", "embedding"), m=2, sub_dim=8, k=4, iters=2
@@ -243,10 +241,10 @@ def test_feed_watermark_filters_cow_reemits(spark, tmp_path):
     # 5 new vectors + 1 changed vector; their buckets' CoW rewrite
     # re-emits ~half the 40 old rows into the feed
     merge_into(t, as_events(_emb(spark, n=5, seed=13, id0=200), 500),
-               batch_id=1, soft_delete=True)
+               batch_id=1)
     # the change's lsn must exceed batch 1's max (704) — replay filter
     merge_into(t, as_events(_emb(spark, n=1, seed=99, id0=7), 5000),
-               batch_id=2, soft_delete=True)
+               batch_id=2)
     assert run_feed.main([
         "--source", t.path, "--checkpoint", str(tmp_path / "ck"),
         "--mode", "index", "--index-kind", "pq", "--target", idx,
@@ -287,8 +285,7 @@ def test_no_feed_watermark_flag_keeps_lagging_lsns(spark, tmp_path):
             "vec_id", "embedding",
         )
 
-    merge_into(t, as_events(_emb(spark, n=30, seed=81), 1000), batch_id=0,
-               soft_delete=True)
+    merge_into(t, as_events(_emb(spark, n=30, seed=81), 1000), batch_id=0)
     idx = str(tmp_path / "pq")
     codes, cbs = ann_index.fit_pq_index(
         t.read().select("vec_id", "embedding"), m=2, sub_dim=8, k=4, iters=2
@@ -299,7 +296,7 @@ def test_no_feed_watermark_flag_keeps_lagging_lsns(spark, tmp_path):
 
     # lagging partition: a NEW vector arrives with lsn 50 < watermark
     merge_into(t, as_events(_emb(spark, n=1, seed=82, id0=700), -650),
-               batch_id=1, soft_delete=True, filter_applied_lsn=False)
+               batch_id=1, filter_applied_lsn=False)
     args = [
         "--source", t.path, "--checkpoint", str(tmp_path / "ck"),
         "--mode", "index", "--target", idx,
@@ -462,8 +459,7 @@ def test_retrain_on_drift_cli(spark, tmp_path, kind):
             "vec_id", "embedding",
         )
 
-    merge_into(t, as_events(_emb(spark, n=40, seed=71), 0), batch_id=0,
-               soft_delete=True)
+    merge_into(t, as_events(_emb(spark, n=40, seed=71), 0), batch_id=0)
     idx = str(tmp_path / kind)
     base = t.read().select("vec_id", "embedding")
     if kind == "pq":
@@ -482,7 +478,7 @@ def test_retrain_on_drift_cli(spark, tmp_path, kind):
     # a batch of far-off-distribution vectors lands
     merge_into(t, as_events(_emb(spark, n=10, seed=72, id0=300,
                                  shift=10.0), 1000),
-               batch_id=1, soft_delete=True)
+               batch_id=1)
     assert run_feed.main([
         "--source", t.path, "--checkpoint", str(tmp_path / "ck"),
         "--mode", "index", "--target", idx,
@@ -523,7 +519,7 @@ def test_status_cli(spark, tmp_path, capsys):
             F.col("vec_id").alias("lsn"), F.lit("I").alias("op"),
             "vec_id", "embedding",
         ),
-        batch_id=0, soft_delete=True, stream="s1",
+        batch_id=0, stream="s1",
     )
     codes, cbs = ann_index.fit_pq_index(
         t.read().select("vec_id", "embedding"), m=2, sub_dim=8, k=4,

@@ -135,7 +135,7 @@ def test_run_cdc_singer_mode_tap_target_loop(spark, tmp_path):
         spark, str(tmp_path / "src"), TRANSCRIPT_SCHEMA, TRANSCRIPT_KEY,
         num_buckets=2, properties={"soft_delete": True},
     )
-    merge_into(src, ev, batch_id=0, soft_delete=True)
+    merge_into(src, ev, batch_id=0)
     frames = str(tmp_path / "frames")
     # no --stream on either side: the export names the stream after the
     # source dir ('src'); the ingest AUTO-DETECTS it from the frames —
@@ -170,7 +170,7 @@ def test_run_cdc_singer_mode_tap_target_loop(spark, tmp_path):
     more = generate_change_events(
         spark, n_convs=8, turns_per_conv=3, n_updates=6, delete_pct=20,
     ).withColumn("lsn", F.col("lsn") + F.lit(50_000))
-    merge_into(src, more, batch_id=1, soft_delete=True)
+    merge_into(src, more, batch_id=1)
     assert run_feed.main([
         "--source", src.path, "--checkpoint", str(tmp_path / "ck_exp"),
         "--mode", "export", "--target", frames,

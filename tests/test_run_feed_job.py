@@ -37,7 +37,7 @@ def test_run_feed_replica_cli(spark, tmp_path):
         num_buckets=4, properties={"soft_delete": True},
     )
     mid = ev.agg(F.max("lsn")).first()[0] // 2
-    merge_into(a, ev.where(F.col("lsn") <= mid), batch_id=0, soft_delete=True)
+    merge_into(a, ev.where(F.col("lsn") <= mid), batch_id=0)
 
     args = [
         "--source", a.path,
@@ -54,7 +54,7 @@ def test_run_feed_replica_cli(spark, tmp_path):
 
     # more commits (updates + deletes), rerun with the SAME checkpoint:
     # only the new range is consumed and the replica converges again
-    merge_into(a, ev.where(F.col("lsn") > mid), batch_id=1, soft_delete=True)
+    merge_into(a, ev.where(F.col("lsn") > mid), batch_id=1)
     assert run_feed.main(args) == 0
     assert sorted(map(tuple, _live(a).collect())) == sorted(
         map(tuple, _live(b).collect())
@@ -94,8 +94,7 @@ def test_run_feed_index_cli(spark, tmp_path):
             "lsn long, op string, vec_id long, embedding array<double>",
         )
 
-    merge_into(t, as_events(emb_rows(range(40)), 0), batch_id=0,
-               soft_delete=True)
+    merge_into(t, as_events(emb_rows(range(40)), 0), batch_id=0)
     idx = str(tmp_path / "idx")
     codes, cbs = ann_index.fit_pq_index(
         t.read().select("vec_id", "embedding"), m=2, sub_dim=8, k=4, iters=2
@@ -106,10 +105,8 @@ def test_run_feed_index_cli(spark, tmp_path):
     # new vectors land AND two existing ones are deleted; the index job
     # consumes the feed from the fitted version, appends the folded
     # delta and REMOVES the tombstoned codes
-    merge_into(t, as_events(emb_rows(range(100, 112)), 500), batch_id=1,
-               soft_delete=True)
-    merge_into(t, as_events(emb_rows([3, 9]), 600, op="D"), batch_id=2,
-               soft_delete=True)
+    merge_into(t, as_events(emb_rows(range(100, 112)), 500), batch_id=1)
+    merge_into(t, as_events(emb_rows([3, 9]), 600, op="D"), batch_id=2)
     args = [
         "--source", t.path,
         "--checkpoint", str(tmp_path / "ck"),
@@ -216,7 +213,7 @@ def test_run_feed_export_singer_full_circle(spark, tmp_path):
         spark, str(tmp_path / "src_singer"), TRANSCRIPT_SCHEMA,
         TRANSCRIPT_KEY, num_buckets=2, properties={"soft_delete": True},
     )
-    merge_into(src, ev, batch_id=0, soft_delete=True)
+    merge_into(src, ev, batch_id=0)
     out = str(tmp_path / "singer_out")
     args = [
         "--source", src.path, "--checkpoint", str(tmp_path / "ck_singer"),
@@ -254,7 +251,7 @@ def test_run_feed_export_singer_full_circle(spark, tmp_path):
     more = generate_change_events(
         spark, n_convs=10, turns_per_conv=3, n_updates=8, delete_pct=20,
     ).withColumn("lsn", F.col("lsn") + F.lit(10_000))
-    merge_into(src, more, batch_id=1, soft_delete=True)
+    merge_into(src, more, batch_id=1)
     assert run_feed.main(args) == 0
     files2 = sorted(glob.glob(os.path.join(out, "batch-*.singer")))
     assert len(files2) > len(files)
@@ -326,7 +323,7 @@ def test_run_feed_cli_real_subprocess(spark, tmp_path):
         spark, str(tmp_path / "a"), TRANSCRIPT_SCHEMA, TRANSCRIPT_KEY,
         num_buckets=2, properties={"soft_delete": True},
     )
-    merge_into(a, ev, batch_id=0, soft_delete=True)
+    merge_into(a, ev, batch_id=0)
     want = sorted(map(tuple, _live(a).collect()))
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -373,7 +370,7 @@ def test_run_feed_index_minhash_cli(spark, tmp_path):
     base = "the quick brown fox jumps over the lazy dog"
     merge_into(t, as_events(
         [(1, base), (2, base + " again"), (3, "unrelated words entirely")],
-        0), batch_id=0, soft_delete=True)
+        0), batch_id=0)
     idx = str(tmp_path / "idx")
     dedup_index.save_minhash_index(
         idx, t.read().select("doc_id", "body"),
@@ -383,11 +380,11 @@ def test_run_feed_index_minhash_cli(spark, tmp_path):
 
     # a new near-dup lands, doc 3 is rewritten to match BASE, doc 2 dies
     merge_into(t, as_events([(4, base + " tonight")], 500),
-               batch_id=1, soft_delete=True)
+               batch_id=1)
     merge_into(t, as_events([(3, base + " rewritten")], 600),
-               batch_id=2, soft_delete=True)
+               batch_id=2)
     merge_into(t, as_events([(2, None)], 700, op="D"),
-               batch_id=3, soft_delete=True)
+               batch_id=3)
     assert run_feed.main([
         "--source", t.path,
         "--checkpoint", str(tmp_path / "ck"),

@@ -9,9 +9,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from pipelinewise_spark.cdc.events import TRANSCRIPT_KEY, TRANSCRIPT_SCHEMA
+from pipelinewise_spark.cdc import pipeline
 from pipelinewise_spark.cdc.gen import generate_change_events
 from pipelinewise_spark.cdc.pipeline import CdcPipeline
-from pipelinewise_spark.lake.table import LakeTable
+from pipelinewise_spark.lake.table import COMPACT_DELTA_CHAIN, LakeTable
 from pipelinewise_spark.singer import protocol, schema as sschema
 
 PAYLOAD_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
@@ -58,7 +59,7 @@ def test_singer_ingest_with_mid_stream_schema_change(spark, tmp_path):
     assert any(h.get("control") == "activate_version" for h in pipe.history)
 
 
-def test_auto_compaction_after_batches(spark, tmp_path):
+def test_auto_compaction_after_batches(spark, tmp_path, monkeypatch):
     """CoW merges replace bucket files (chains stay short); append-only
     loads GROW chains — auto-compaction folds them back."""
     events = generate_change_events(
@@ -68,7 +69,8 @@ def test_auto_compaction_after_batches(spark, tmp_path):
         spark, str(tmp_path / "t2"), TRANSCRIPT_SCHEMA, [],  # no PK → append
         num_buckets=2, bucket_col="conv_id",
     )
-    pipe = CdcPipeline(table, stream="s", compact_every=4, max_files_per_bucket=1,
+    monkeypatch.setattr(pipeline, "COMPACT_MAX_FILES_PER_BUCKET", 1)
+    pipe = CdcPipeline(table, stream="s", compact_every=4,
                        primary_key_required=False)
     pipe.replay(events, n_batches=4)
     assert all(len(fl) <= 1 for fl in table.manifest["buckets"].values())
@@ -178,3 +180,73 @@ def test_identical_schema_messages_reconcile_once(spark, tmp_path, monkeypatch):
     for m in msgs + msgs:
         real(twin, sschema.jsonschema_to_struct(m["schema"]))
     assert table.manifest["fields"] == twin.manifest["fields"]
+
+
+def test_compact_cadence_counts_applied_batches_and_history_is_bounded(
+    spark, tmp_path, monkeypatch
+):
+    """``compact_every`` fires on every Nth APPLIED batch while
+    activate_version and auto_compact control records interleave with
+    the batches, and the history keeps only the last
+    ``MAX_APPLIED_BATCH_IDS`` entries (a long tail's driver memory stays
+    bounded)."""
+    table = LakeTable.create(spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA,
+                             TRANSCRIPT_KEY, num_buckets=2)
+    pipe = CdcPipeline(table, stream="s", mode="mor", compact_every=3)
+    events = []
+    batch = [0]
+    monkeypatch.setattr(pipeline, "MAX_APPLIED_BATCH_IDS", 4)
+    monkeypatch.setattr(pipeline, "merge_into",
+                        lambda *a, **kw: {"rows": 0, "batch_id": batch[0]})
+    # every merge-on-read batch off the cadence trips the delta backstop
+    monkeypatch.setattr(table, "delta_pressure", lambda: events.append(
+        ("probe", batch[0])) or {"max_chain": COMPACT_DELTA_CHAIN + 1})
+    monkeypatch.setattr(table, "compact", lambda **kw: events.append(
+        ("compact", batch[0])))
+    for i in range(1, 13):
+        batch[0] = i
+        activate = json.dumps({"type": "ACTIVATE_VERSION", "stream": "s",
+                               "version": i})
+        pipe.ingest_singer_lines(
+            spark.createDataFrame([(activate,)], "value string"), batch_id=i
+        )
+    cadence = [i for n, (kind, i) in enumerate(events)
+               if kind == "compact" and events[n - 1] != ("probe", i)]
+    assert cadence == [3, 6, 9, 12]
+    assert sum(kind == "compact" for kind, _ in events) == 12
+    # 12 batches made 32 records; only the last four remain
+    assert pipe.history == [
+        {"rows": 0, "batch_id": 11},
+        {"control": "auto_compact",
+         "pressure": {"max_chain": COMPACT_DELTA_CHAIN + 1}},
+        {"control": "activate_version", "versions": [12]},
+        {"rows": 0, "batch_id": 12},
+    ]
+
+
+def test_quarantine_content_digest_is_an_order_blind_reduce(spark, tmp_path):
+    """A direct ingest (no batch id) names its dead-letter batch by a
+    content digest: the same garbage lines in another order fold to the
+    same id, one extra line makes a new id, and the digest is a
+    distributed reduce — no ``collect_list`` of every bad line into one
+    row."""
+    from test_plan_invariants import _sql_plans
+
+    table = LakeTable.create(spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA,
+                             TRANSCRIPT_KEY, num_buckets=2)
+    pipe = CdcPipeline(table, stream="s", validate="quarantine")
+    garbage = [f'{{"type":"RECORD" garbage {i}' for i in range(3)]
+
+    def ingest(lines):
+        return pipe.ingest_singer_lines(
+            spark.createDataFrame([(ln,) for ln in lines], "value string")
+        )
+
+    plans = _sql_plans(spark, lambda: ingest(garbage))
+    assert plans and not [p for p in plans if "collect_list" in p]
+    quarantine = LakeTable(spark, pipe.quarantine_path)
+    assert quarantine.read().count() == 3
+    ingest(garbage[::-1])  # same lines, another order: same id, folded
+    assert quarantine.refresh().read().count() == 3
+    ingest(garbage + ['{"type":"RECORD" garbage 3'])  # a new id: appended
+    assert quarantine.refresh().read().count() == 7

@@ -11,6 +11,7 @@ import re
 from pyspark.sql import functions as F
 from test_plan_invariants import _sql_plans
 
+from pipelinewise_spark.cdc import merge
 from pipelinewise_spark.cdc.events import TRANSCRIPT_KEY, TRANSCRIPT_SCHEMA
 from pipelinewise_spark.cdc.gen import generate_change_events
 from pipelinewise_spark.cdc.merge import merge_into
@@ -62,7 +63,7 @@ def test_scan_clustered_join_has_single_exchange(spark, tmp_path, events=None):
     assert not [t.name for t in spark.catalog.listTables() if t.name.startswith("pw_spj_")]
 
 
-def test_scan_clustered_falls_back_on_deltas(spark, tmp_path):
+def test_scan_clustered_falls_back_on_deltas(spark, tmp_path, monkeypatch):
     ev = generate_change_events(spark, n_convs=10, turns_per_conv=3, n_updates=20)
     table = LakeTable.create(
         spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA, TRANSCRIPT_KEY, num_buckets=4
@@ -72,11 +73,12 @@ def test_scan_clustered_falls_back_on_deltas(spark, tmp_path):
         assert tgt is None  # outstanding deltas → no clustered contract
     # a forced-spj merge over those deltas falls back AND reports
     # truthfully (the metric must not claim the fast path ran)
-    m = merge_into(table, ev.where(F.col("lsn") > 30), batch_id=1, spj=True)
+    monkeypatch.setattr(merge, "SPJ", True)
+    m = merge_into(table, ev.where(F.col("lsn") > 30), batch_id=1)
     assert m["spj"] is False
 
 
-def test_merge_spj_equals_plain(spark, tmp_path):
+def test_merge_spj_equals_plain(spark, tmp_path, monkeypatch):
     ev = generate_change_events(
         spark, n_convs=25, turns_per_conv=4, n_updates=120, delete_pct=10,
         dup_every=5,
@@ -87,8 +89,10 @@ def test_merge_spj_equals_plain(spark, tmp_path):
                           TRANSCRIPT_KEY, num_buckets=4)
     for i, (lo, hi) in enumerate([(0, 100), (100, 170), (170, 10**9)]):
         batch = ev.where((F.col("lsn") > lo) & (F.col("lsn") <= hi))
-        ma = merge_into(ta, batch, batch_id=i, spj=True)
-        mb = merge_into(tb, batch, batch_id=i, spj=False)
+        monkeypatch.setattr(merge, "SPJ", True)
+        ma = merge_into(ta, batch, batch_id=i)
+        monkeypatch.setattr(merge, "SPJ", False)
+        mb = merge_into(tb, batch, batch_id=i)
         # batch 0 hits an EMPTY table → no files → honest fallback
         assert ma["spj"] is (i > 0) and mb["spj"] is False
         for k in ("inserted", "updated", "deleted", "stale"):
@@ -101,7 +105,7 @@ def test_merge_spj_equals_plain(spark, tmp_path):
     ev.unpersist()
 
 
-def test_merge_into_spj_plan_single_exchange(spark, tmp_path):
+def test_merge_into_spj_plan_single_exchange(spark, tmp_path, monkeypatch):
     """The PRODUCTION merge join — not a hand-built one — must shuffle
     only the source batch when the SPJ read is active. Regression for the
     round-2 finding: eqNullSafe join keys are Coalesce-rewritten by
@@ -116,15 +120,17 @@ def test_merge_into_spj_plan_single_exchange(spark, tmp_path):
     )
     merge_into(table, ev.where(F.col("lsn") <= 120), batch_id=0)
     out = []
+    monkeypatch.setattr(merge, "SPJ", True)
     plan, n_hash = _merge_write_plan(spark, lambda: out.append(merge_into(
         table, ev.where((F.col("lsn") > 120) & (F.col("lsn") <= 150)),
-        batch_id=1, spj=True,
+        batch_id=1,
     )))
     assert out[0]["spj"] is True
     assert n_hash == 1, plan
     assert "SelectedBucketsCount" in plan, plan
+    monkeypatch.setattr(merge, "SPJ", False)
     plan, n_hash = _merge_write_plan(spark, lambda: merge_into(
-        table, ev.where(F.col("lsn") > 150), batch_id=2, spj=False,
+        table, ev.where(F.col("lsn") > 150), batch_id=2,
     ))
     # the plain path pays the target-side exchange the SPJ path eliminates
     assert n_hash == 2, plan
@@ -158,7 +164,7 @@ def test_merge_rejects_null_primary_key(spark, tmp_path):
         assert t.read().count() > 0
 
 
-def test_merge_spj_auto_gates_on_target_bytes(spark, tmp_path):
+def test_merge_spj_auto_gates_on_target_bytes(spark, tmp_path, monkeypatch):
     """auto mode: a tiny target (a few KB) keeps the plain read (the
     avoided shuffle is free, AQE flexibility wins); forcing a 0-byte
     threshold flips it to the clustered path."""
@@ -167,7 +173,7 @@ def test_merge_spj_auto_gates_on_target_bytes(spark, tmp_path):
                          TRANSCRIPT_KEY, num_buckets=4)
     m0 = merge_into(t, ev.where(F.col("lsn") <= 30), batch_id=0)
     assert m0["spj"] is False  # default 256 MB threshold
-    m1 = merge_into(t, ev.where(F.col("lsn") > 30), batch_id=1,
-                    spj="auto", spj_min_target_bytes=0)
+    monkeypatch.setattr(merge, "SPJ_MIN_TARGET_BYTES", 0)
+    m1 = merge_into(t, ev.where(F.col("lsn") > 30), batch_id=1)
     assert m1["spj"] is True
     assert t.bucket_bytes() > 0
