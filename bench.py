@@ -156,14 +156,11 @@ def cdc_apply_bench(
 
 def bigtarget_merge_bench(spark, *, n_target: int = 3_000_000,
                           n_batch: int = 150_000, num_buckets: int = 64) -> dict:
-    """The SPJ regime: a large target table, a (relatively) small change
-    batch — the shape a 100 TB table sees every micro-batch. Measures the
-    same merge with the plain read vs the storage-partitioned bucketed
-    scan (`LakeTable.scan_clustered`); shuffle-byte evidence lives in
-    scripts/spj_experiment.py, this records the wall-clock A/B."""
+    """A large target table and a (relatively) small change batch — the
+    shape a 100 TB table sees every micro-batch: the wall clock of one
+    copy-on-write merge (delta commit, then the bucket-local fold)."""
     from pyspark.sql import functions as F
 
-    from pipelinewise_spark.cdc import merge
     from pipelinewise_spark.cdc.events import TRANSCRIPT_KEY, TRANSCRIPT_SCHEMA
     from pipelinewise_spark.cdc.merge import merge_into
     from pipelinewise_spark.lake.table import LakeTable
@@ -192,33 +189,23 @@ def bigtarget_merge_bench(spark, *, n_target: int = 3_000_000,
     batch = gen(n_batch, n_target + 1).persist()
     batch.count()
 
-    out = {}
-    spj_default = merge.SPJ
-    for label, flag in (("plain", False), ("spj", True)):
-        merge.SPJ = flag  # force the read path for this A/B row
-        path = os.path.join(base, label)
-        shutil.copytree(proto, path)
-        t = LakeTable(spark, path)
-        merge_into(t, batch, batch_id="warm", stream="b")  # warm-up
-        times = []
-        for i in range(N_RUNS):
-            t2_path = os.path.join(base, f"{label}-{i}")
-            shutil.copytree(proto, t2_path)
-            t2 = LakeTable(spark, t2_path)
-            t0 = time.perf_counter()
-            m = merge_into(t2, batch, batch_id=0, stream="b")
-            times.append(time.perf_counter() - t0)
-            shutil.rmtree(t2_path, ignore_errors=True)
-        out[label] = {"sec": round(_median(times), 3),
-                      "times": [round(x, 3) for x in times],
-                      "updated": m["updated"], "inserted": m["inserted"]}
-    merge.SPJ = spj_default
+    path = os.path.join(base, "warm")
+    shutil.copytree(proto, path)
+    merge_into(LakeTable(spark, path), batch, batch_id="warm", stream="b")
+    times = []
+    for i in range(N_RUNS):
+        t2_path = os.path.join(base, f"run-{i}")
+        shutil.copytree(proto, t2_path)
+        t2 = LakeTable(spark, t2_path)
+        t0 = time.perf_counter()
+        m = merge_into(t2, batch, batch_id=0, stream="b")
+        times.append(time.perf_counter() - t0)
+        shutil.rmtree(t2_path, ignore_errors=True)
     batch.unpersist()
     shutil.rmtree(base, ignore_errors=True)
-    assert out["plain"]["updated"] == out["spj"]["updated"]
-    out["n_target"] = n_target
-    out["n_batch"] = n_batch
-    return out
+    return {"sec": round(_median(times), 3), "times": [round(x, 3) for x in times],
+            "updated": m["updated"], "inserted": m["inserted"],
+            "n_target": n_target, "n_batch": n_batch}
 
 
 def multistream_bench(
@@ -568,8 +555,7 @@ def run_default() -> dict:
         "cdc_apply": med["cdc_apply"],
         "cdc_apply_skewed": med["cdc_apply_skewed"],
         "cdc_apply_mor": med["cdc_apply_mor"],
-        "merge_bigtarget_plain": big["plain"]["sec"],
-        "merge_bigtarget_spj": big["spj"]["sec"],
+        "merge_bigtarget": big["sec"],
         "multistream6_seq": ms["concurrency_1"],
         "multistream6_conc4": ms["concurrency_4"],
         "lake_feed_drain": round(feed["sec"], 3),
@@ -580,8 +566,7 @@ def run_default() -> dict:
         queries.setdefault(k, v)
     spread = rows.spread()
     spread.update({
-        "merge_bigtarget_plain": [min(big["plain"]["times"]), max(big["plain"]["times"])],
-        "merge_bigtarget_spj": [min(big["spj"]["times"]), max(big["spj"]["times"])],
+        "merge_bigtarget": [min(big["times"]), max(big["times"])],
         "multistream6_seq": [min(ms["concurrency_1_times"]), max(ms["concurrency_1_times"])],
         "multistream6_conc4": [min(ms["concurrency_4_times"]), max(ms["concurrency_4_times"])],
         "lake_feed_drain": [min(feed["warm_times"] or [feed["sec"]]),

@@ -70,6 +70,18 @@ def find_indexes(root: str) -> list[str]:
     return sorted(out)
 
 
+def _base_bytes(t) -> int:
+    """On-disk bytes of the table's base files (a stat per file)."""
+    total = 0
+    for fl in t.manifest["buckets"].values():
+        for rel in fl:
+            try:
+                total += os.path.getsize(os.path.join(t.path, rel))
+            except OSError:
+                pass
+    return total
+
+
 def table_status(path: str, root: str) -> dict:
     from pipelinewise_spark.lake.table import LakeTable
 
@@ -87,7 +99,7 @@ def table_status(path: str, root: str) -> dict:
         "keys": ",".join(t.key_cols) or "(append-only)",
         "num_buckets": t.num_buckets,
         "files": files,
-        "bytes": t.bucket_bytes(),
+        "bytes": _base_bytes(t),
         "delta_files": pressure["files"],
         "delta_max_chain": pressure["max_chain"],
         "last_operation": s.get("operation"),

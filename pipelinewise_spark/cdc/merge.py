@@ -23,30 +23,31 @@ One apply sequence for every table kind (:func:`_merge_once`):
    backstop → :class:`ExactlyOnceWindowError`;
 2. bookmark prefix filter — events at or below the stream's committed LSN
    are dropped (one rule for keyed and keyless batches);
-3. one projection onto the table's fields (:func:`_project`);
-4. the frame to write, the only step that differs by kind:
+3. in-batch dedup (keyed) and one projection onto the table's fields
+   (:func:`_project`);
+4. one observed write (:meth:`LakeTable.write_observed`): keyed batches
+   land as merge-on-read DELTA files, keyless ones as appended files
+   under a content-hash bucket. The row count and the batch's max LSN are
+   collected via ``DataFrame.observe`` on the SAME pass that writes the
+   files (no second scan), and a NULL primary key fails the batch before
+   anything publishes;
+5. one atomic manifest commit of files + bookmark + batch id — the
+   exactly-once point (see lake/table.py). From here readers see the
+   batch: a keyed read resolves last-per-key across base and deltas,
+   bucket by bucket.
 
-   - copy-on-write (keyed, ``mode="cow"``): ONLY the affected buckets of
-     the target are read (manifest-level partition pruning — a 100k-row
-     batch against a 100 TB table reads a few hundred buckets, not the
-     table) and full-outer joined with the deduped batch on the PK — the
-     shape Iceberg's copy-on-write MERGE lowers to — optionally through a
-     storage-partitioned read of the target;
-   - merge-on-read (keyed, ``mode="mor"``): the deduped batch as delta
-     files, no target read;
-   - append (keyless): the batch as is, under a content-hash bucket;
-
-5. one observed write (:meth:`LakeTable.write_observed`): action counts
-   and the batch's max LSN are collected via ``DataFrame.observe`` on the
-   SAME pass that writes the files (no second scan), and a NULL primary
-   key fails the batch before anything publishes;
-6. one bookmark advance and one atomic manifest commit of files +
-   bookmark + batch id (exactly-once; see lake/table.py).
+Copy-on-write (keyed, ``mode="cow"``, the default) adds a second commit,
+the fold (:func:`_fold`): the buckets the batch touched are rewritten by
+the full-outer-join action rule (:func:`_cow_frame`) over two bucketed
+relations — their prior state and the batch's own delta files — and the
+result replaces those buckets, deltas included. With key-aligned buckets
+neither side of the fold needs an exchange. A fold that loses its commit
+to another writer changes nothing: the batch is already applied, and its
+deltas wait for the next fold or ``compact()``.
 """
 
 from __future__ import annotations
 
-from contextlib import ExitStack
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -65,11 +66,6 @@ from pipelinewise_spark.lake.table import (
 )
 
 DROP_ACTIONS = ("delete", "noop_delete")
-# Storage-partitioned-join read of the copy-on-write target (see
-# :func:`_merge_once`): "auto" takes it when the affected buckets hold
-# at least SPJ_MIN_TARGET_BYTES on disk; True / False force either read.
-SPJ: bool | str = "auto"
-SPJ_MIN_TARGET_BYTES = 256 << 20
 # Re-applies after a lost optimistic commit (:class:`CommitConflict`).
 COMMIT_RETRIES = 2
 
@@ -92,15 +88,24 @@ def merge_into(
     mode: str = "cow",
 ) -> dict:
     """Apply one change batch (see :func:`_merge_once` for semantics and
-    the physical plan). Retries up to ``COMMIT_RETRIES`` times on
-    :class:`CommitConflict` — the optimistic-concurrency loss against
-    another writer: refresh to the winner's manifest and re-apply.
-    Correct because the batch-id guard and LSN bookmark filter
-    re-evaluate against the refreshed state (a batch the winner already
-    committed no-ops), and the loser's orphaned data files are reclaimed
-    by ``vacuum``. This is the retry the reference
-    gets for free from single-writer pipes and a warehouse MERGE
-    transaction (``db_sync.py:359-431``)."""
+    the physical plan). Retries up to ``COMMIT_RETRIES`` times when the
+    batch's own commit loses the optimistic-concurrency race
+    (:class:`CommitConflict`) against another writer: refresh to the
+    winner's manifest and re-apply. Correct because the batch-id guard
+    and LSN bookmark filter re-evaluate against the refreshed state (a
+    batch the winner already committed no-ops), and the loser's orphaned
+    data files are reclaimed by ``vacuum``. This is the retry the
+    reference gets for free from single-writer pipes and a warehouse
+    MERGE transaction (``db_sync.py:359-431``).
+
+    A copy-on-write batch publishes two manifest versions: the delta
+    commit that applies it (summary ``operation="merge_delta"``, metrics
+    ``rows`` and ``max_lsn``), then the fold that rewrites its buckets
+    (``operation="merge"``, the action counts). A reader between the two
+    pays the merge-on-read cost on the touched buckets: last-per-key over
+    base plus delta files, one task per bucket. A lost fold is not
+    retried (the batch is already applied); the result then carries
+    ``folded=False``."""
     for attempt in range(COMMIT_RETRIES + 1):
         try:
             return _merge_once(
@@ -143,37 +148,24 @@ def _merge_once(
     a double-apply.
 
     ``mode`` (keyed tables; a keyless table always appends):
-    - ``"cow"`` (default) — copy-on-write: read affected buckets, full
-      merge, rewrite. Read-optimal; write cost O(affected buckets).
-    - ``"mor"`` — merge-on-read: append the deduped batch as DELTA files
-      (O(batch) commit, NO target read — the small-batch/huge-table
-      regime where CoW write amplification dominates). Reads resolve
-      last-per-key across base+delta; ``LakeTable.compact`` folds deltas
-      back (and physically removes hard-deleted rows, the reference's
-      post-load DELETE).
+    - ``"cow"`` (default) — copy-on-write: commit the deduped batch as
+      delta files, then fold it into the buckets it touched
+      (:func:`_fold`). Read-optimal; write cost O(affected buckets).
+    - ``"mor"`` — merge-on-read: the delta commit alone (O(batch) commit,
+      NO target read — the small-batch/huge-table regime where CoW write
+      amplification dominates). Reads resolve last-per-key across
+      base+delta; ``LakeTable.compact`` folds deltas back (and physically
+      removes hard-deleted rows, the reference's post-load DELETE).
+
+    Both modes evaluate the batch once: the delta write. The plan of a
+    key-aligned table pays one exchange, the dedup's; its partitioning
+    is already the bucket hash, so the write is clustered.
 
     Soft or hard delete is the table property ``soft_delete``, set at
     :meth:`LakeTable.create`: the read-time tombstone filter keys off the
     same property, so the merge has no per-call override that could
     contradict it. The change envelope's ``op`` and ``lsn`` columns carry
-    the operation and the ordering.
-
-    ``SPJ`` — storage-partitioned-join read of the target: when the
-    buckets are key-aligned and carry no outstanding deltas, the target
-    scan is registered as a bucketed table
-    (:meth:`LakeTable.scan_clustered`) so the merge join shuffles ONLY the
-    source batch — the target side, the dominant shuffle in the
-    huge-table/small-batch regime (95% of shuffle bytes measured,
-    scripts/spj_experiment.py), moves zero bytes.
-
-    ``"auto"`` (the module default) enables it only when the affected
-    buckets hold ≥ ``SPJ_MIN_TARGET_BYTES`` on disk: when the target side
-    is small the shuffle it avoids is nearly free, while the bucketed
-    scan costs AQE's partition coalescing and skew-join splitting and
-    pins the source shuffle to ``num_buckets`` partitions (measured
-    25-60% slower at 10-MB-target bench scale, vs a 95% shuffle-byte cut
-    at 4M-row-target scale). ``True`` forces it, ``False`` forces the
-    plain read; tests and experiments patch the constant to force one."""
+    the operation and the ordering."""
     if batch_id is not None and batch_id in table.applied_batch_ids(pipeline_id):
         return {"skipped": True, "batch_id": batch_id}
     lsn_filter = filter_applied_lsn and "lsn" in source.columns
@@ -201,124 +193,92 @@ def _merge_once(
 
     key_cols = table.key_cols
     cow = bool(key_cols) and mode != "mor"
-    affected = None  # the buckets a copy-on-write merge reads and replaces
-    with ExitStack() as stack:
-        if cow:
-            # Affected-bucket probe runs on the RAW (pre-dedup) batch:
-            # dedup keeps ≥1 row per key so the bucket sets are
-            # identical, and the raw probe is a cheap partial-distinct of
-            # small ints with no dedup shuffle and no need to persist the
-            # deduped batch.
-            affected = sorted(
-                r[0]
-                for r in source.select(table.bucket_expr().alias("b"))
-                .distinct()
-                .collect()
-            )
-            if not affected:
-                if batch_id is not None:
-                    table.commit(
-                        batch_id=batch_id,
-                        pipeline_id=pipeline_id,
-                        summary={"operation": "merge", "empty_batch": True},
-                    )
-                return {"rows": 0, "batch_id": batch_id}
-            use_spj = bool(SPJ) and table.buckets_aligned_with_keys
-            if SPJ == "auto" and use_spj:
-                use_spj = table.bucket_bytes(affected) >= SPJ_MIN_TARGET_BYTES
-            tgt = None
-            if use_spj:
-                # storage-partitioned read: the bucketed scan declares
-                # HashPartitioning(key_cols, num_buckets) → the
-                # full-outer join shuffles only the source batch; the
-                # join output lands exactly one bucket per task, so the
-                # clustered write stays shuffle-free
-                tgt = stack.enter_context(table.scan_clustered(buckets=affected))
-                use_spj = tgt is not None  # may decline (outstanding deltas)
-            if tgt is None:
-                tgt = table.read(buckets=affected)
-            if use_spj:
-                # ONE source exchange for the whole merge: pin the raw
-                # batch to HashPartitioning(key_cols, num_buckets) up
-                # front — the dedup hash-aggregate reuses it
-                # (ClusteredDistribution satisfied) and the bucketed join
-                # needs exactly this partitioning, so neither plans its
-                # own shuffle. Without this the plan pays two source-side
-                # exchanges (dedup at spark.sql.shuffle.partitions, then
-                # a re-shuffle to num_buckets for the join). Fixed-width
-                # repartition also disables AQE coalescing on this
-                # exchange, which is what the one-side-bucketed SMJ
-                # requires anyway.
-                source = source.repartition(table.num_buckets, *key_cols)
-        if key_cols:
-            source = latest_per_key(source, key_cols)
+    if key_cols:
+        # the deduped batch lands as delta files; a null PK would group
+        # with every other null PK at read-time resolution
+        batch = _project(table, latest_per_key(source, key_cols))
+        operation = "merge_delta" if cow else "merge_mor"
+        files_arg, count, tags = "delta_added", "rows", {} if cow else {"mode": "mor"}
+        null_key = any_null_key(key_cols)
+    else:
+        # J4 — append-only load (no primary key): no dedup, no join,
+        # no bucket replace; files are appended under a content-hash
+        # bucket (the reference's synthetic-RID append, target_postgres
+        # __init__.py:132-150 RID branch + db_sync.py:395-400), so the
+        # commit is O(batch) regardless of table size.
         batch = _project(table, source)
-        if cow:
-            operation, files_arg, tags = "merge", "added", {}
-            frame, aggs = _cow_frame(table, batch, tgt)
-            null_key = F.col("__null_key")
-            keep = ~F.col("__action").isin(*DROP_ACTIONS)
-        elif key_cols:
-            # merge-on-read: the deduped batch lands as delta files; a
-            # null PK would group with every other null PK at read-time
-            # resolution
-            operation, files_arg, tags = "merge_mor", "delta_added", {"mode": "mor"}
-            frame, aggs = batch, [F.count(F.lit(1)).alias("rows"),
-                                  F.max(LSN_COL).alias("max_lsn")]
-            null_key, keep = any_null_key(key_cols), None
-        else:
-            # J4 — append-only load (no primary key): no dedup, no join,
-            # no bucket replace; files are appended under a content-hash
-            # bucket (the reference's synthetic-RID append, target_postgres
-            # __init__.py:132-150 RID branch + db_sync.py:395-400), so the
-            # commit is O(batch) regardless of table size.
-            operation, files_arg, tags = "append", "added", {"appended": True}
-            frame, aggs = batch, [F.count(F.lit(1)).alias("inserted"),
-                                  F.max(LSN_COL).alias("max_lsn")]
-            null_key = keep = None
-        added, m = table.write_observed(
-            frame, aggs, null_key=null_key, keep=keep,
-            n_partitions=len(affected) if affected else None,
-            # the deduped batch and the join output are already
-            # hash(key)-partitioned; with key-aligned buckets the write
-            # needs no further shuffle
-            clustered=table.buckets_aligned_with_keys,
-        )
-    if affected is not None:
-        # Source repeatability contract: the batch is evaluated twice
-        # (bucket probe, then join/write). File/kafka-offset batches are
-        # repeatable by construction; a live JDBC query is not — if new
-        # rows appeared in a bucket the probe didn't see, committing them
-        # would APPEND next to live rows of the same PK. Fail loudly
-        # instead of corrupting; the orphaned files are reclaimed by
-        # vacuum().
-        stray = set(added) - {str(b) for b in affected}
-        if stray:
-            raise RuntimeError(
-                f"source changed between bucket probe and merge write "
-                f"(unexpected buckets {sorted(stray)}); snapshot/persist "
-                f"the source before merge_into"
-            )
+        operation, files_arg, count = "append", "added", "inserted"
+        tags, null_key = {"appended": True}, None
+    prior = table.manifest
+    added, m = table.write_observed(
+        batch, [F.count(F.lit(1)).alias(count), F.max(LSN_COL).alias("max_lsn")],
+        null_key=null_key,
+        # the deduped batch is already hash(key)-partitioned; with
+        # key-aligned buckets the write needs no further shuffle
+        clustered=table.buckets_aligned_with_keys,
+    )
     max_lsn = m.pop("max_lsn")
+    if cow and not added:
+        if batch_id is not None:
+            table.commit(
+                batch_id=batch_id,
+                pipeline_id=pipeline_id,
+                summary={"operation": "merge", "empty_batch": True},
+            )
+        return {"rows": 0, "batch_id": batch_id}
     new_lsn = max(
         int(max_lsn) if max_lsn is not None else -1,
         int(prev) if prev is not None else -1,
     )
     metrics = {k: (int(v) if v is not None else None) for k, v in m.items()}
     metrics.update(tags)
-    summary = {"operation": operation, "metrics": metrics}
-    result = {**metrics, "batch_id": batch_id, "max_lsn": max_lsn}
-    if affected is not None:
-        summary["affected_buckets"] = affected
-        result.update(affected_buckets=len(affected), spj=use_spj)
     table.commit(
         **{files_arg: added},
-        replaced_buckets=affected,
         bookmarks={stream: {"lsn": new_lsn}} if new_lsn >= 0 else None,
         batch_id=batch_id,
         pipeline_id=pipeline_id,
-        summary=summary,
+        summary={"operation": operation,
+                 "metrics": {**metrics, "max_lsn": max_lsn} if cow else metrics},
     )
+    if cow:
+        return _fold(table, prior, added, batch_id=batch_id, max_lsn=max_lsn)
+    return {**metrics, "batch_id": batch_id, "max_lsn": max_lsn}
+
+
+def _fold(
+    table: LakeTable, prior: dict, batch_files: dict[str, list[str]], *,
+    batch_id: Any, max_lsn: Any,
+) -> dict:
+    """Rewrite the buckets the just-committed batch touched: the
+    :func:`_cow_frame` action rule over their state in ``prior`` (the
+    snapshot the delta commit was built on) and the batch's own delta
+    files, found by file, not by LSN. The rows that survive replace the
+    buckets — their base and all their deltas — in a commit that expects
+    the delta commit to be the newest version. Losing that race changes
+    nothing: the batch is applied, its deltas stay readable, and the
+    next fold or ``compact()`` takes them."""
+    affected = sorted(int(b) for b in batch_files)
+    version = table.version
+    added, m = table.fold(
+        affected, manifest=prior, batch=batch_files,
+        combine=lambda state, src: _cow_frame(table, src, state),
+        aggs=_cow_counts(), keep=~F.col("__action").isin(*DROP_ACTIONS),
+        clustered=table.buckets_aligned_with_keys,
+    )
+    metrics = {k: (int(v) if v is not None else None) for k, v in m.items()}
+    result = {**metrics, "batch_id": batch_id, "max_lsn": max_lsn,
+              "affected_buckets": len(affected)}
+    try:
+        table.commit(
+            added=added,
+            replaced_buckets=affected,
+            expected_version=version,
+            summary={"operation": "merge", "metrics": metrics,
+                     "affected_buckets": affected},
+        )
+    except CommitConflict:
+        table.refresh()
+        result["folded"] = False
     return result
 
 
@@ -329,8 +289,8 @@ def _project(table: LakeTable, src: DataFrame) -> DataFrame:
     the change envelope: ``_lsn`` from ``lsn`` (NULL when a keyless
     source has none), ``_sdc_extracted_at`` from ``time_extracted``,
     ``_sdc_batched_at`` is now, and on keyed tables ``_sdc_deleted_at``
-    marks a ``D`` event, which also travels on as ``__op`` for the CoW
-    action rule."""
+    marks a ``D`` event — the mark the CoW action rule reads back from the
+    batch's delta files."""
     has = set(src.columns)
     extracted = (F.col("time_extracted") if "time_extracted" in has
                  else F.lit(None).cast("timestamp"))
@@ -346,35 +306,25 @@ def _project(table: LakeTable, src: DataFrame) -> DataFrame:
     for f in table.logical_schema.fields:
         c = derived.get(f.name, F.col(f.name) if f.name in has else None)
         cols.append((F.lit(None).cast(f.dataType) if c is None else c).alias(f.name))
-    if table.key_cols:
-        cols.append(F.col("op").alias("__op"))
     return src.select(*cols)
 
 
-def _cow_frame(
-    table: LakeTable, src: DataFrame, tgt: DataFrame
-) -> tuple[DataFrame, list]:
-    """Full-outer join of the deduped batch with the affected buckets:
-    every joined row with its merge ``__action``, plus the aggregates the
-    observed write collects (action counts, the batch's max LSN). A ``D``
-    keeps a tombstone under the table's ``soft_delete`` property and
-    drops the row otherwise."""
+def _cow_frame(table: LakeTable, src: DataFrame, tgt: DataFrame) -> DataFrame:
+    """Full-outer join of the batch's rows with the prior state of the
+    buckets they touch: every joined row with its merge ``__action``. A
+    batch row marked deleted (``_sdc_deleted_at``) keeps a tombstone under
+    the table's ``soft_delete`` property and drops the row otherwise. The
+    batch wins LSN ties."""
     soft_delete = bool(table.manifest["properties"].get("soft_delete", False))
     s = src.withColumn("__s_exists", F.lit(True)).alias("s")
     t = tgt.withColumn("__t_exists", F.lit(True)).alias("t")
     # Plain EqualTo join keys, NOT eqNullSafe: Catalyst rewrites
     # null-safe equality to Coalesce-wrapped keys, which no longer match
-    # the bucketed scan's HashPartitioning(raw keys) — the target side
-    # would be RE-shuffled and the storage-partitioned-join read (the 95%
-    # shuffle-byte saving, scripts/spj_experiment.py) silently lost.
-    # Measured on the production join shape: eqNullSafe plans 2
-    # hash-partitioning exchanges, == plans 1 (tests/test_spj.py::
-    # test_merge_into_spj_plan_single_exchange freezes this). Sound
-    # because CDC primary keys are non-null — enforced by the observed
-    # write: any null-key source row fails the merge BEFORE commit
-    # (observe-counted on the write pass, zero extra scan), so target
-    # rows, which are only ever written by this merge / the same-checked
-    # paths, can never carry a null key either. (A table written by a
+    # the bucketed relations' HashPartitioning(raw keys) — both sides
+    # would be re-shuffled. Sound because CDC primary keys are non-null:
+    # any null-key row fails the batch's delta write BEFORE its commit
+    # (observe-counted on the write pass, zero extra scan), so neither
+    # side of the fold can carry a null key. (A table written by a
     # PRE-check engine version could hold legacy null-key rows that ==
     # can never match — they would be carried forever; audit with
     # ``table.read().where(<key>.isNull()).count()`` and rewrite via
@@ -390,7 +340,7 @@ def _cow_frame(
     is_stale = t_exists & s_exists & (
         F.col(f"s.{LSN_COL}") < F.col(f"t.{LSN_COL}")
     )
-    is_delete = F.col("s.__op") == "D"
+    is_delete = F.col(f"s.{SDC_DELETED_AT}").isNotNull()
     action = (
         F.when(~s_exists, F.lit("carry"))
         .when(is_stale, F.lit("stale"))
@@ -407,17 +357,16 @@ def _cow_frame(
         F.when(take_target, F.col(f"t.{c}")).otherwise(F.col(f"s.{c}")).alias(c)
         for c in (f["logical"] for f in table.manifest["fields"])
     ]
-    frame = joined.select(
-        *out_cols,
-        action.alias("__action"),
-        F.when(s_exists, F.col(f"s.{LSN_COL}")).alias("__s_lsn"),
-        (s_exists & any_null_key(table.key_cols, "s.")).alias("__null_key"),
-    )
+    return joined.select(*out_cols, action.alias("__action"))
+
+
+def _cow_counts() -> list:
+    """The aggregates the fold's observed write collects: action counts
+    and the joined row count."""
     counts = [
         F.sum(F.when(F.col("__action") == a, 1).otherwise(0)).alias(name)
         for a, name in [("insert", "inserted"), ("update", "updated"),
                         ("delete", "deleted"), ("tombstone", "tombstoned"),
                         ("stale", "stale"), ("carry", "carried")]
     ]
-    return frame, [*counts, F.max("__s_lsn").alias("max_lsn"),
-                   F.count(F.lit(1)).alias("joined_rows")]
+    return [*counts, F.count(F.lit(1)).alias("joined_rows")]

@@ -15,7 +15,11 @@ Semantics (documented, not hidden):
 - feed unit = FILES ADDED per commit (CoW bucket rewrites re-emit the
   rewritten buckets' rows — a bucket-level changelog; MoR delta appends
   and append-only tables emit exactly the batch rows). Downstream
-  last-per-key folding collapses re-emits, same as any CDC consumer.
+  last-per-key folding collapses re-emits, same as any CDC consumer. A
+  copy-on-write batch reaches the feed with its fold, which re-emits
+  every row of its delta commit (``operation="merge_delta"``, skipped
+  here); a batch whose fold was lost reaches it with the next fold or
+  compaction of its buckets.
 - EXECUTOR-PARALLEL reads: the driver plans InputPartitions from
   manifest JSON only (O(commits) small reads); parquet decode runs in
   Spark tasks. Consecutive small files PACK into shared partitions up
@@ -102,6 +106,8 @@ class _LakeTableStreamReader(DataSourceStreamReader):
                     f"change-feed manifest v{v} was vacuumed; increase "
                     f"vacuum keep_versions above the consumer lag"
                 )
+            if m.get("summary", {}).get("operation") == "merge_delta":
+                continue
             for ent in m.get("summary", {}).get("added_files", []):
                 rels.append((ent["path"], int(ent.get("bytes") or 0)))
         return rels

@@ -16,7 +16,9 @@ properties CDC ingest needs:
   num_buckets)`` (SURVEY §1.5: ``bucket(N, conv_id)``). A MERGE only reads
   and rewrites the buckets the source batch touches — at 100 TB with 4096
   buckets a 100k-row batch touching 200 buckets rewrites ~5% of the table,
-  not all of it, and the merge join shuffles only those buckets.
+  not all of it — and every bucket file is declared to Spark as one
+  bucket of a bucketed relation, so the merge fold, merge-on-read
+  resolution and compaction run bucket-locally with no exchange.
 - **exactly-once state**: bookmarks (Singer STATE, reference
   ``cli/pipelinewise.py:1034-1073``) and applied batch ids commit IN the
   same manifest as the data — one atomic unit, so a replayed micro-batch
@@ -278,44 +280,15 @@ class LakeTable:
         — merges that disable that backstop are rejected (cdc/merge.py)."""
         return int(self.manifest.get("batch_ids_evicted", {}).get(pipeline_id, 0))
 
-    def bucket_bytes(self, buckets: list[int] | None = None) -> int:
-        """On-disk bytes of the base files for the selected buckets —
-        driver-side O(files) stat, used by the merge's adaptive
-        storage-partitioned-join decision."""
-        keys = (
-            [str(b) for b in buckets]
-            if buckets is not None
-            else list(self.manifest["buckets"])
-        )
-        total = 0
-        for k in keys:
-            for rel in self.manifest["buckets"].get(k, []):
-                try:
-                    total += os.path.getsize(os.path.join(self.path, rel))
-                except OSError:
-                    pass
-        return total
-
     def delta_pressure(self) -> dict:
-        """Outstanding merge-on-read delta pressure: total delta file
-        count/bytes, deepest per-bucket chain, and bucket count. Driver-
-        side O(outstanding files) stat — bounded in practice by the
-        compaction trigger that consumes it (a healthy table holds at
-        most ``COMPACT_DELTA_CHAIN`` deltas per touched bucket). Deltas
-        are what read amplification, manifest growth, AND the
-        stats_filter refusal (``read``) all scale with, so this is the
-        one number a flood must keep bounded."""
+        """Outstanding merge-on-read delta pressure from the manifest
+        alone: total delta file count, deepest per-bucket chain, and
+        bucket count. Deltas are what read amplification, manifest
+        growth, AND the stats_filter refusal (``read``) all scale with,
+        so this is the one number a flood must keep bounded."""
         deltas = self.manifest.get("deltas", {})
-        nbytes = 0
-        for fl in deltas.values():
-            for rel in fl:
-                try:
-                    nbytes += os.path.getsize(os.path.join(self.path, rel))
-                except OSError:
-                    pass
         return {
             "files": sum(len(fl) for fl in deltas.values()),
-            "bytes": nbytes,
             "max_chain": max((len(fl) for fl in deltas.values()), default=0),
             "buckets": sum(1 for fl in deltas.values() if fl),
         }
@@ -333,9 +306,9 @@ class LakeTable:
         (append-only) tables have no bucket columns; their rows bucket by
         a content hash over the data columns so compaction / overwrite
         still distribute evenly. SINGLE source of truth — bucket_expr and
-        scan_clustered's CLUSTERED BY declaration must never diverge (the
-        SPJ path's correctness rests on the declared layout being the
-        physical truth)."""
+        the bucketed relations' CLUSTERED BY declaration must never
+        diverge (every bucket-local read, fold and compaction rests on the
+        declared layout being the physical truth)."""
         return self.bucket_cols or self.data_cols
 
     def bucket_expr(self, cols: list[Column | str] | None = None) -> Column:
@@ -582,6 +555,17 @@ class LakeTable:
         return df.select(*[F.col(f["physical"]).alias(f["logical"]) for f in fields])
 
     @contextlib.contextmanager
+    def _linked(self, manifest: dict, files: list[tuple[int, str]]):
+        """:meth:`_bucketed_relation` of ``files`` over a link dir private
+        to the block and removed on exit: for a relation consumed inside
+        the block (``None`` when ``files`` is empty)."""
+        link_dir = os.path.join(self.path, f"_tmp-spj-{uuid.uuid4().hex[:12]}")
+        try:
+            yield self._bucketed_relation(manifest, files, link_dir)
+        finally:
+            shutil.rmtree(link_dir, ignore_errors=True)
+
+    @contextlib.contextmanager
     def scan_clustered(
         self,
         buckets: list[int] | None = None,
@@ -590,9 +574,8 @@ class LakeTable:
     ):
         """Storage-partitioned read: yield a DataFrame whose SCAN declares
         the table's hash-bucket layout to Catalyst (see
-        :meth:`_bucketed_relation`), so a merge join keyed on the bucket
-        columns does NOT re-shuffle the target side (measured: 95% of the
-        merge's shuffle bytes, scripts/spj_experiment.py).
+        :meth:`_bucketed_relation`), so a join or aggregate keyed on the
+        bucket columns does NOT re-shuffle the table side.
 
         Yields ``None`` when the fast path does not apply: outstanding MoR
         deltas in the selected buckets (the caller's join would need
@@ -603,11 +586,10 @@ class LakeTable:
         ``stats_filter`` (see :meth:`read`) additionally skips files whose
         footer bounds miss the range — sound for the bucket declaration
         (the remaining rows still hash to their declared bucket), intended
-        for read-only analytical scans; the CDC merge never passes it.
+        for read-only analytical scans.
 
         Trade-off (documented): the unshuffled side is outside AQE's
-        skew-join splitting. In the CDC merge the source is deduped to one
-        row per key pre-join, so join skew equals bucket-size skew —
+        skew-join splitting, so join skew equals bucket-size skew —
         bounded by the hash distribution, not by hot keys.
         """
         manifest = self.manifest
@@ -616,16 +598,9 @@ class LakeTable:
         if any(manifest.get("deltas", {}).get(k) for k in keys):
             yield None
             return
-        link_dir = os.path.join(self.path, f"_tmp-spj-{uuid.uuid4().hex[:12]}")
-        try:
-            df = self._bucketed_relation(
-                manifest,
-                self._files(manifest, keys, stats_filter=stats_filter),
-                link_dir,
-            )
+        files = self._files(manifest, keys, stats_filter=stats_filter)
+        with self._linked(manifest, files) as df:
             yield None if df is None else _hide_tombstones(df, manifest)
-        finally:
-            shutil.rmtree(link_dir, ignore_errors=True)
 
     # ---------------------------------------------------------------- write
 
@@ -736,7 +711,7 @@ class LakeTable:
         if null_key is not None:
             aggs = [*aggs, F.sum(F.when(null_key, 1).otherwise(0)).alias("null_keys")]
         obs = Observation()
-        out = df.observe(obs, *aggs)
+        out = df.observe(obs, *aggs) if aggs else df
         if keep is not None:
             out = out.where(keep)
         added = self.write_bucket_files(
@@ -744,7 +719,7 @@ class LakeTable:
             clustered=clustered,
         )
         try:
-            m = obs.get
+            m = obs.get if aggs else {}
         except Exception:
             m = df.agg(*aggs).first().asDict()
         null_keys = int(m.pop("null_keys", 0) or 0)
@@ -1194,6 +1169,48 @@ class LakeTable:
             "kept_versions": keep,
         }
 
+    def fold(
+        self,
+        buckets: list[int],
+        *,
+        manifest: dict | None = None,
+        batch: dict[str, list[str]] | None = None,
+        combine=None,
+        aggs: list[Column] = (),
+        keep: Column | None = None,
+        clustered: bool = True,
+    ) -> tuple[dict[str, list[str]], dict]:
+        """Write ``buckets`` anew from their resolved state: the base and
+        delta files ``manifest`` (default: the current snapshot) lists
+        for them, scanned as one bucketed relation
+        (:meth:`_bucketed_relation`), deltas resolved last-per-key and
+        tombstones hidden, as :meth:`read` resolves them. Returns (added
+        files, ``aggs`` values) like :meth:`write_observed`; does NOT
+        publish — commit with ``replaced_buckets=buckets``.
+
+        With ``combine``, the rows written are ``combine(state, batch
+        relation)`` instead: ``batch`` maps bucket → files (a change
+        batch's delta files), exposed as a second bucketed relation. Each
+        relation hands a task exactly one bucket, so a join or aggregate
+        keyed on the bucket columns plans no exchange, and the result is
+        written ``clustered`` (one file per bucket) unless the caller
+        knows its frame is not bucket-partitioned."""
+        m = manifest or self.manifest
+        keys = [str(b) for b in buckets]
+        src_files = [(int(b), rel) for b, fl in (batch or {}).items() for rel in fl]
+        with self._linked(m, self._files(m, keys)) as state, \
+                self._linked(m, src_files) as src, \
+                _bucketed_scans_forced(self.spark):
+            if state is None:
+                state = self.spark.createDataFrame([], self.logical_schema)
+            elif self.key_cols and any(m.get("deltas", {}).get(k) for k in keys):
+                state = latest_per_key(state, self.key_cols, lsn_col=LSN_COL)
+            state = _hide_tombstones(state, m)
+            return self.write_observed(
+                state if combine is None else combine(state, src), aggs,
+                keep=keep, n_partitions=len(keys), clustered=clustered,
+            )
+
     def compact(self, max_files_per_bucket: int = 1) -> dict | None:
         """Rewrite buckets whose file chains grew past the threshold OR
         that carry merge-on-read deltas (resolving them into the base —
@@ -1202,36 +1219,20 @@ class LakeTable:
         At scale this is the background optimize job; it bounds read
         amplification after many small merges.
 
-        One plan for every compaction, with ZERO exchanges: the selected
-        buckets' base+delta files are scanned as one bucketed relation
-        (:meth:`_bucketed_relation`) that hands each task exactly one
-        bucket's rows, last-per-key resolves deltas inside that task,
-        and the resolved rows are written ``clustered`` — scan → resolve
-        → write, so at 100 TB the optimize job moves no data over the
-        network."""
-        deltas = self.manifest.get("deltas", {})
+        One plan for every compaction, with ZERO exchanges: :meth:`fold`
+        scans the selected buckets' base+delta files as one bucketed
+        relation that hands each task exactly one bucket's rows,
+        last-per-key resolves deltas inside that task, and the resolved
+        rows are written ``clustered`` — scan → resolve → write, so at
+        100 TB the optimize job moves no data over the network."""
         todo = sorted(
             {int(b) for b, fl in self.manifest["buckets"].items()
              if len(fl) > max_files_per_bucket}
-            | {int(b) for b, fl in deltas.items() if fl}
+            | {int(b) for b, fl in self.manifest.get("deltas", {}).items() if fl}
         )
         if not todo:
             return None
-        keys = [str(b) for b in todo]
-        # the rewrite finishes inside this call, so its links are private
-        link_dir = os.path.join(self.path, f"_tmp-spj-{uuid.uuid4().hex[:12]}")
-        try:
-            files = self._files(self.manifest, keys)
-            df = self._bucketed_relation(self.manifest, files, link_dir)
-            if self.key_cols and any(deltas.get(k) for k in keys):
-                df = latest_per_key(df, self.key_cols, lsn_col=LSN_COL)
-            df = _hide_tombstones(df, self.manifest).withColumn(
-                "_bucket", self.bucket_expr()
-            )
-            with _bucketed_scans_forced(self.spark):
-                added = self.write_bucket_files(df, clustered=True)
-        finally:
-            shutil.rmtree(link_dir, ignore_errors=True)
+        added, _ = self.fold(todo)
         return self.commit(
             added=added,
             replaced_buckets=todo,
@@ -1247,7 +1248,8 @@ _forced: dict[int, tuple[int, str]] = {}  # id(session) → (holders, saved)
 @contextlib.contextmanager
 def _bucketed_scans_forced(spark: SparkSession):
     """Plan bucketed scans as bucketed for the duration. A bare
-    scan→write (a compaction with nothing to resolve) has no required
+    scan→write (a compaction with nothing to resolve, or a fold into
+    buckets that held nothing) has no required
     distribution, so ``autoBucketedScan`` would silently fall back to a
     plain file scan (one partition per FILE, buckets interleaved across
     tasks) and the clustered write would scatter a bucket over files.
@@ -1258,8 +1260,8 @@ def _bucketed_scans_forced(spark: SparkSession):
     one restores it — interleaved save/set/restore pairs would otherwise
     leave it at ``false``. While held, other queries of the session also
     scan bucketed relations bucketed; the engine's other bucketed scans
-    (merge-on-read resolution, storage-partitioned merge reads) feed an
-    aggregate or a join, which keeps them bucketed anyway."""
+    (merge-on-read resolution in :meth:`LakeTable.read`) feed an
+    aggregate, which keeps them bucketed anyway."""
     key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     sid = id(spark)
     with _FORCED_LOCK:

@@ -1,10 +1,11 @@
-"""Steady-state SPJ soak (VERDICT r2 item 3): N consecutive micro-batches
-merged into a ≥1 GB target under the merge's ``SPJ="auto"`` read rule,
-compaction and vacuum interleaved — per-batch wall stability is the evidence that the merge
+"""Steady-state merge soak (VERDICT r2 item 3): N consecutive micro-batches
+merged into a ≥1 GB target — copy-on-write batches (delta commit, then the
+bucket-local fold) and merge-on-read delta appends, compaction and vacuum
+interleaved. Per-batch wall stability is the evidence that the merge
 path has no degradation mode (file-count growth, manifest bloat, stats
 accumulation) over a long-running stream.
 
-Run: ``python scripts/soak_spj.py [n_target] [n_batches] [batch_rows]``
+Run: ``python scripts/soak_merge.py [n_target] [n_batches] [batch_rows]``
 Prints one JSON line per batch + a summary line.
 """
 
@@ -55,7 +56,7 @@ def main():
 
     from pipelinewise_spark.cdc.events import TRANSCRIPT_KEY, TRANSCRIPT_SCHEMA
 
-    spark = get_spark(app_name="spj-soak")
+    spark = get_spark(app_name="merge-soak")
     spark.sparkContext.setLogLevel("ERROR")
     scratch = "/dev/shm" if os.path.isdir("/dev/shm") else None
     base = tempfile.mkdtemp(prefix="pw-soak-", dir=scratch)
@@ -68,13 +69,14 @@ def main():
     t0 = time.time()
     table.overwrite(gen(spark, n_target, 0, n_target).drop("lsn", "op"))
     load_wall = time.time() - t0
-    tgt_bytes = table.bucket_bytes()
+    tgt_bytes = sum(os.path.getsize(os.path.join(table.path, rel))
+                    for fl in table.manifest["buckets"].values() for rel in fl)
     print(json.dumps({
         "phase": "load", "rows": n_target, "wall_sec": round(load_wall, 1),
         "target_gb": round(tgt_bytes / 1e9, 2),
     }))
 
-    walls, spj_used = [], 0
+    walls = []
     maint = []
     lsn0 = n_target + 1
     for b in range(n_batches):
@@ -82,16 +84,14 @@ def main():
         lsn0 += batch_rows
         # two of every six batches land as MoR delta appends (the
         # small-batch fast path), folded by the next compact() — so the
-        # soak exercises CoW-SPJ merges, O(batch) delta appends, AND
+        # soak exercises CoW folds, O(batch) delta appends, AND
         # delta-folding compaction against the same table
         mode = "mor" if b % 6 in (4, 5) else "cow"
         t0 = time.time()
         m = merge_into(table, batch, batch_id=b, stream="soak", mode=mode)
         w = time.time() - t0
         walls.append(w)
-        spj_used += bool(m.get("spj"))
         rec = {"batch": b, "mode": mode, "wall_sec": round(w, 2),
-               "spj": m.get("spj"),
                "updated": m.get("updated"), "inserted": m.get("inserted"),
                "buckets": m.get("affected_buckets")}
         if (b + 1) % 6 == 0:
@@ -116,7 +116,7 @@ def main():
     # — the metric this soak exists to bound is the live root's size
     root_sz = os.path.getsize(sorted(glob.glob(mdir + "/v*.json"))[-1])
     summary = {
-        "metric": "spj_soak",
+        "metric": "merge_soak",
         "segmented": segmented,
         "n_segments": len(table.manifest.get("segments", {})),
         "root_manifest_kb": round(root_sz / 1024, 1),
@@ -124,7 +124,6 @@ def main():
         "target_gb": round(tgt_bytes / 1e9, 2),
         "n_batches": n_batches,
         "batch_rows": batch_rows,
-        "spj_batches": spj_used,
         "wall_mean": round(sum(walls) / len(walls), 2),
         "wall_p50": round(walls_s[len(walls) // 2], 2),
         "wall_max": round(max(walls), 2),

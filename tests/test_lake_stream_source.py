@@ -96,13 +96,13 @@ def test_lake_stream_source_vacuumed_range_fails_loudly(spark, tmp_path):
     )
     merge_into(t, ev.where(F.col("lsn") <= 12), batch_id=0)
     merge_into(t, ev.where(F.col("lsn") > 12), batch_id=1)
-    # v1's files were superseded by v2's bucket rewrite; vacuum removes them
+    # v2's files were superseded by v4's bucket rewrite; vacuum removes them
     t.vacuum(keep_versions=1, min_age_sec=0)
     reader = _LakeTableStreamReader(t.read().schema, {"path": t.path})
     with pytest.raises(RuntimeError, match="vacuum"):
         reader.partitions({"version": 0}, {"version": 1})
     # the still-live range reads fine
-    parts = reader.partitions({"version": 1}, {"version": 2})
+    parts = reader.partitions({"version": 3}, {"version": 4})
     assert parts and all(list(reader.read(p)) for p in parts)
 
 
@@ -123,10 +123,10 @@ def test_lake_stream_source_plans_one_partition_per_file(spark, tmp_path):
     assert len(added) > 1
     # default plan PACKS tiny files (partitions scale with bytes, not
     # file count); maxBytesPerPartition=1 degenerates to one per file
-    packed = reader.partitions({"version": 0}, {"version": 1})
+    packed = reader.partitions({"version": 1}, {"version": 2})
     assert 1 <= len(packed) < len(added)
     reader.max_bytes = 1
-    parts = reader.partitions({"version": 0}, {"version": 1})
+    parts = reader.partitions({"version": 1}, {"version": 2})
     assert len(parts) == len(added)
     # per-partition reads yield ARROW RECORD BATCHES (vectorized path)
     batches = [b for p in parts for b in reader.read(p)]

@@ -109,6 +109,28 @@ def test_mor_then_cow_interop(spark, tmp_path, events):
     _assert_equal(table, _expected(events))
 
 
+def test_delta_pressure_reads_only_the_manifest(spark, tmp_path, events, monkeypatch):
+    """The pressure counts come from the manifest's file lists; no delta
+    file is stat'ed."""
+    table = LakeTable.create(
+        spark, str(tmp_path / "t"), TRANSCRIPT_SCHEMA, TRANSCRIPT_KEY, num_buckets=4
+    )
+    for i, (lo, hi) in enumerate([(0, 100), (100, 10**9)]):
+        merge_into(table, _lsn_range(events, lo, hi), batch_id=i, stream="s",
+                   mode="mor")
+    deltas = table.manifest["deltas"]
+
+    def no_stat(path):
+        raise AssertionError(f"stat of {path}")
+
+    monkeypatch.setattr(os.path, "getsize", no_stat)
+    assert table.delta_pressure() == {
+        "files": sum(len(fl) for fl in deltas.values()),
+        "max_chain": max(len(fl) for fl in deltas.values()),
+        "buckets": sum(1 for fl in deltas.values() if fl),
+    }
+
+
 def test_mor_batch_id_idempotence(spark, tmp_path, events):
     table = LakeTable.create(
         spark, str(tmp_path / "t5"), TRANSCRIPT_SCHEMA, TRANSCRIPT_KEY, num_buckets=4

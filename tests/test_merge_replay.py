@@ -279,9 +279,9 @@ def test_merge_emptying_a_bucket_on_bucket_col_layout(spark, tmp_path):
 
 def test_removed_apply_options_raise_type_error():
     """The table owns soft or hard delete, the envelope owns ``op`` and
-    ``lsn``, and the SPJ read rule is a module constant: the apply path
-    takes none of them as an option, so a stale caller fails loudly at
-    the call instead of being silently ignored."""
+    ``lsn``, and the merge has one read path (no SPJ switch): the apply
+    path takes none of them as an option, so a stale caller fails loudly
+    at the call instead of being silently ignored."""
     from pipelinewise_spark.cdc.partial import partial_sync
     from pipelinewise_spark.cdc.pipeline import CdcPipeline
 

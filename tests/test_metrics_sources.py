@@ -29,12 +29,12 @@ def test_commit_metrics_and_lineage(spark, tmp_path):
     merge_into(table, events.where(F.col("lsn") > 50), batch_id=1, stream="s")
 
     hist = manifest_history(table)
-    assert [m["version"] for m in hist] == [0, 1, 2]
+    assert [m["version"] for m in hist] == [0, 1, 2, 3, 4]
 
     mdf = commit_metrics_df(spark, table)
     rows = {r["version"]: r for r in mdf.collect()}
-    assert rows[1]["operation"] == "merge" and rows[1]["inserted"] > 0
-    assert rows[2]["updated"] >= 0 and rows[2]["rows_added"] > 0
+    assert rows[2]["operation"] == "merge" and rows[2]["inserted"] > 0
+    assert rows[4]["updated"] >= 0 and rows[4]["rows_added"] > 0
 
     ldf = file_lineage_df(spark, table)
     lineage = ldf.collect()

@@ -315,7 +315,7 @@ def test_multistream_partial_failure_exactly_once(spark, tmp_path):
     mixed = ev_a.unionByName(ev_b)
     with pytest.raises(RuntimeError):
         multi.apply_batch(mixed, batch_id=7)
-    assert ta.refresh().version == 1  # a committed before b failed
+    assert ta.refresh().version == 2  # a committed before b failed
     assert tb.refresh().version == 0
     ra_after_first = sorted(
         (r["conv_id"], r["turn_idx"], r["_lsn"]) for r in ta.read().collect()

@@ -234,11 +234,11 @@ def test_manifest_segment_auto_gate_transition(spark, tmp_path, monkeypatch):
     # batch 0: one conversation only → ≤3 files, below the patched gate
     merge_into(t, ev.where(F.col("conv_id") == first_conv), batch_id=0)
     v1_flat = "segments" not in _json.load(
-        open(os.path.join(t.path, lt.MANIFEST_DIR, f"v{1:012d}.json"))
+        open(os.path.join(t.path, lt.MANIFEST_DIR, f"v{2:012d}.json"))
     )
     merge_into(t, ev.where(F.col("conv_id") != first_conv), batch_id=1)  # crosses gate
     root2 = _json.load(
-        open(os.path.join(t.path, lt.MANIFEST_DIR, f"v{2:012d}.json"))
+        open(os.path.join(t.path, lt.MANIFEST_DIR, f"v{4:012d}.json"))
     )
     assert v1_flat and "segments" in root2 and "buckets" not in root2
     # state correct through reopen; replay still guarded
@@ -257,7 +257,9 @@ def test_manifest_segment_auto_gate_transition(spark, tmp_path, monkeypatch):
     )
     m = merge_into(t2, one, batch_id=2)
     after = set(glob.glob(os.path.join(t.path, "_manifests", "seg-*")))
-    assert m["affected_buckets"] == 1 and len(after - before) == 1
+    # one segment per manifest version: the delta commit and the fold
+    assert m["affected_buckets"] == 1 and len(after - before) == 2
+    assert len({os.path.basename(p)[:10] for p in after - before}) == 1
     # vacuum drops superseded segments and the table still reads
     res = t2.vacuum(keep_versions=1, min_age_sec=0)
     assert res["removed_segments"] >= 1

@@ -534,7 +534,7 @@ def test_status_cli(spark, tmp_path, capsys):
     assert len(out["tables"]) == 1  # the index's codes table folds away
     tab = out["tables"][0]
     assert tab["table"] == "transcripts"
-    assert tab["version"] == 1 and tab["keys"] == "vec_id"
+    assert tab["version"] == 2 and tab["keys"] == "vec_id"
     assert tab["files"] == 2 and tab["bytes"] > 0
     assert tab["last_metrics"]["inserted"] == 25
     assert "s1" in tab["bookmarks"]
